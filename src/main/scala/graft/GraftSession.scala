@@ -25,7 +25,11 @@ object GraftSession {
       // (TIMESTAMP_NTZ), untouched by this flag. EventTime dispatches on
       // whichever dtype arrives.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Engine Catalyst extensions (simhash64, vec_dot, lsh_sign_buckets).
+      // Engine Catalyst extensions: the native kernels (parse_bitrate_mbps,
+      // the simhash/minhash/rolling-hash families, md5_low64, vec_dot,
+      // lsh_sign_buckets, …). The engine calls its kernels by name and has
+      // no declarative fallback, so every session must come from this
+      // builder.
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // InferFiltersFromGenerate synthesizes size(arr)>0 below every explode;
       // predicate pushdown then substitutes the alias chain into the filter

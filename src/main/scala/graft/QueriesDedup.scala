@@ -205,19 +205,13 @@ private[graft] object QueriesDedup {
       val tok = analytics.Par.spreadForCpu(t(s, dir, "documents"))
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ws"))
         .where(size(col("ws")) >= 3)
-      // fused minhash_sig_md5 kernel when registered (bit-identical to the
-      // declarative chain — DedupSpec; same dispatch as d04/d11's shared
+      // fused minhash_sig_md5 kernel (bit-identical to the declarative
+      // chain — DedupSpec; same kernel as d04/d11's shared
       // Dedup.minhashSignaturesPortable, inlined here because this query
       // keeps doc_id)
-      val sigs =
-        if (s.catalog.functionExists("minhash_sig_md5"))
-          tok.select(col("doc_id"),
-            call_function("minhash_sig_md5", col("ws"), lit(3), lit(16), lit(42L)).as("sig"))
-        else tok
-          .select(col("doc_id"), Dedup.shinglesFromTokens(col("ws"), 3).as("sh"))
-          .select(col("doc_id"), transform(col("sh"), sh => Dedup.md5Low64(sh)).as("hs"))
-          .select(col("doc_id"), Dedup.minhashFromHashes(col("hs"), 16).as("sig"))
-      sigs.select(col("doc_id"), posexplode(col("sig")))
+      tok.select(col("doc_id"),
+          call_function("minhash_sig_md5", col("ws"), lit(3), lit(16), lit(42L)).as("sig"))
+        .select(col("doc_id"), posexplode(col("sig")))
         .toDF("doc_id", "pos", "min_hash")
         .orderBy(col("doc_id"), col("pos"))
     }),

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.analytics.{Dedup, Multimodal, Similarity, TextAnalysis}
-import graft.functions.NetFunctions
 import graft.QueryHelpers._
 
 /** Relational core (q01-q35): TPC-H-shaped aggregation, joins,
@@ -238,15 +237,10 @@ private[graft] object QueriesRelational {
         (pmod(col("l_linenumber"), lit(6)) + 1).cast("int"))
       val br = concat(col("l_quantity").cast("string"), unit)
       val total = sum(dec(col("mbps"), 28, 6))
-      // native fused parser when registered (one compiled-regex pass/row vs
-      // two regexp_extract passes; value-identical — NetFunctionsSpec),
-      // declarative fallback otherwise
-      val parse: Column => Column =
-        if (s.catalog.functionExists("parse_bitrate_mbps"))
-          c => call_function("parse_bitrate_mbps", c.cast("string"))
-        else NetFunctions.parseBitrateMbps
+      // native fused parser (one compiled-regex pass/row vs two
+      // regexp_extract passes; value-identical — NetFunctionsSpec)
       t(s, dir, "lineitem")
-        .select(parse(br).as("mbps"))
+        .select(call_function("parse_bitrate_mbps", br.cast("string")).as("mbps"))
         // The exact 6-dp Mbps total exceeds 2^53 as bps (×1e6) even at
         // sf0.01 (double inexact), and the single-BIGINT bps total would
         // overflow 2^63 near sf1 — so emit the exact decimal sum as TWO

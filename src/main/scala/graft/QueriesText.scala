@@ -80,8 +80,8 @@ private[graft] object QueriesText {
       val toks = analytics.Par.spreadForCpu(t(s, dir, "documents"))
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ws"))
       val cards = toks
-        .select(TextAnalysis.rollingHashFromTokens(s, col("ws")).as("fp_xx"),
-          TextAnalysis.rollingHashPortableFromTokens(s, col("ws")).as("fp_md5"))
+        .select(call_function("rolling_hash64", col("ws")).as("fp_xx"),
+          call_function("rolling_hash64_md5", col("ws")).as("fp_md5"))
         .agg(countDistinct(col("fp_xx")).as("fp_card"),
           countDistinct(col("fp_md5")).as("md5_card"))
         .select(col("fp_card"), (col("fp_card") === col("md5_card")).as("card_agree"))
@@ -97,7 +97,7 @@ private[graft] object QueriesText {
     "t07_rolling_fingerprint_portable" -> ((s, dir) => {
       analytics.Par.spreadForCpu(t(s, dir, "documents"))
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ws"))
-        .select(col("doc_id"), TextAnalysis.rollingHashPortableFromTokens(s, col("ws")).as("fp64"))
+        .select(col("doc_id"), call_function("rolling_hash64_md5", col("ws")).as("fp64"))
         .orderBy(col("doc_id"))
     }),
 

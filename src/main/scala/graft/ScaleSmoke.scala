@@ -458,62 +458,6 @@ object ScaleSmoke {
       Dedup.connectedComponentsContracted(chain, spark.range(n).toDF("id"))
     }
 
-    // The one scale number the streaming surface lacked: the FULL NEF data
-    // plane end-to-end — fileSource → runIngest (parse → enrich →
-    // normalize → policy → Kafka-shaped per-notifId batches) → idempotent
-    // KeyedUpsertStore sink, Trigger.AvailableNow. Corpus = 10k
-    // notifications × mult (one JSON document per line, notifIds cycling a
-    // 100-subscription dimension), written distributed and untimed; the
-    // timed region is the streaming query start → drain.
-    if (shouldRun("streaming_ingest")) {
-      import graft.streaming.Stream
-      import org.apache.spark.sql.Row
-      val nNotifs = 10000L * mult
-      val nSubs = 100
-      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-smoke")
-      val srcDir = s"$tmp/src"
-      val payload = format_string(
-        """{"notifId":"sub-%d","eventNotifs":[{"event":"PERF_DATA",""" +
-          """"timeStamp":"2026-04-20T10:15:00Z","perfDataInfos":[{""" +
-          """"ueIpAddr":{"ipv4Addr":"10.0.%d.%d"},"appId":"app-%d",""" +
-          """"timeStamp":"2026-04-20T10:15:00Z","perfData":{""" +
-          """"thrputUl":"%d.%d Mbps","thrputDl":"%d.%d Mbps","pdb":%d,"plr":%d}}]}]}""",
-        pmod(col("id"), lit(nSubs)),
-        pmod(col("id"), lit(250)), pmod(col("id") * 7, lit(250)),
-        pmod(col("id"), lit(10)),
-        pmod(col("id"), lit(90)) + 10, pmod(col("id"), lit(100)),
-        pmod(col("id") * 3, lit(900)) + 100, pmod(col("id") * 11, lit(100)),
-        pmod(col("id"), lit(50)) + 1, pmod(col("id"), lit(30)))
-      spark.range(nNotifs).select(payload.as("value")).write.text(srcDir)
-      val subs = spark.createDataFrame(
-        java.util.Arrays.asList((0 until nSubs).map(i =>
-          Row(s"sub-$i", Row(1, "000001"), "internet",
-            Seq("PERF_DATA", "UE_MOBILITY"), s"nef-sub-$i",
-            "http://nef:8090/nnef-event-exposure/v1/subscriptions", 1000000L)): _*),
-        graft.schemas.NefSchemas.subscription)
-      val store = new Stream.KeyedUpsertStore(s"scale-smoke-${System.nanoTime()}")
-      spark.catalog.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      // maxFilesPerTrigger splits the AvailableNow drain into several
-      // micro-batches so per-batch latency is a measured distribution,
-      // not one wall number (the writer above emits one file per input
-      // partition)
-      val q = Stream.runIngest(
-        spark.readStream.option("maxFilesPerTrigger", 8).text(srcDir),
-        subs, s"$tmp/ck", Stream.upsertSender(store))
-      q.awaitTermination()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val batches = q.recentProgress.filter(_.numInputRows > 0)
-      val lat = batches.map(_.durationMs.get("triggerExecution").toLong)
-      results("streaming_ingest") = (sec, nNotifs)
-      System.err.println(f"[scale-smoke] streaming_ingest: $sec%.2fs " +
-        f"rows=$nNotifs (${nNotifs / sec}%.0f notifs/s, sink keys=${store.snapshot.size}, " +
-        s"batches=${batches.length}, batch_ms mean=" +
-        f"${if (lat.isEmpty) 0.0 else lat.sum.toDouble / lat.length}%.0f " +
-        s"max=${if (lat.isEmpty) 0L else lat.max})")
-    }
-
     // Cross-modal retrieval (m07) at blowup: the image-side embed is a
     // per-row projection (dim × tokens md5 folds), probes fixed — cost
     // must track the image scan linearly; the top-1 join is

@@ -234,19 +234,13 @@ object Dedup {
     */
   def minhashSignatures(docs: DataFrame, n: Int, k: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tok = tokenized(docs, idCol, textCol).where(size(col("ws")) >= n)
-    if (docs.sparkSession.catalog.functionExists("minhash_sig")) {
-      // native fused kernel (graft.plans.MinHashSig via GraftExtensions):
-      // bit-identical to the declarative chain below (DedupSpec), one
-      // codegen'd loop instead of three interpreted HOF projections
-      tok.select(col("id"),
+    // native fused kernel (graft.plans.MinHashSig): bit-identical to the
+    // declarative shinglesFromTokens → xxhash64 → minhashFromHashes chain
+    // (DedupSpec), one codegen'd loop instead of three interpreted HOF
+    // projections
+    tokenized(docs, idCol, textCol).where(size(col("ws")) >= n)
+      .select(col("id"),
         call_function("minhash_sig", col("ws"), lit(n), lit(k), lit(42L)).as("sig"))
-    } else {
-      tok
-        .select(col("id"), shinglesFromTokens(col("ws"), n).as("sh"))
-        .select(col("id"), transform(col("sh"), s => xxhash64(s)).as("hs"))
-        .select(col("id"), minhashFromHashes(col("hs"), k).as("sig"))
-    }
   }
 
   /** MinHash signatures over the PORTABLE md5-low64 shingle hash — the
@@ -257,20 +251,14 @@ object Dedup {
     */
   def minhashSignaturesPortable(docs: DataFrame, n: Int, k: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tok = tokenized(docs, idCol, textCol).where(size(col("ws")) >= n)
-    if (docs.sparkSession.catalog.functionExists("minhash_sig_md5")) {
-      // fused kernel (graft.plans.MinHashSigMd5): bit-identical to the
-      // declarative chain below (DedupSpec), one codegen'd loop instead of
-      // three interpreted HOF projections each paying the five-node
-      // md5→hex→conv chain per shingle
-      tok.select(col("id"),
+    // fused kernel (graft.plans.MinHashSig over md5-low64): bit-identical
+    // to the declarative shinglesFromTokens → md5Low64 → minhashFromHashes
+    // chain (DedupSpec), one codegen'd loop instead of three interpreted
+    // HOF projections each paying the five-node md5→hex→conv chain per
+    // shingle
+    tokenized(docs, idCol, textCol).where(size(col("ws")) >= n)
+      .select(col("id"),
         call_function("minhash_sig_md5", col("ws"), lit(n), lit(k), lit(42L)).as("sig"))
-    } else {
-      tok
-        .select(col("id"), shinglesFromTokens(col("ws"), n).as("sh"))
-        .select(col("id"), transform(col("sh"), s => md5Low64(s)).as("hs"))
-        .select(col("id"), minhashFromHashes(col("hs"), k).as("sig"))
-    }
   }
 
   /** MinHash + banded LSH candidate pairs with estimated Jaccard.
@@ -540,57 +528,46 @@ object Dedup {
         col("l.recall").as("recall"))
   }
 
-  /** 64-bit SimHash per document. When the `simhash64` native expression is
-    * registered (graft.plans.GraftExtensions via `spark.sql.extensions`),
-    * the whole hash runs as one fused codegen'd loop; otherwise the
-    * declarative fallback below computes the identical value
-    * (equivalence asserted in DedupSpec) through three projection
-    * boundaries — token hashes → 64-element vote vector → folded long —
-    * so each intermediate is evaluated once per row.
+  /** 64-bit SimHash per document: the fused `simhash64` kernel
+    * (graft.plans.SimHash64), one codegen'd loop per row, bit-identical to
+    * the declarative construction in [[simhashedDeclarativeXx]] (DedupSpec).
     */
-  def simhashed(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tokenized = spreadForCpu(docs)
-      .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("ws"))
-    if (docs.sparkSession.catalog.functionExists("simhash64")) {
-      // coalesce: the native expression null-propagates a NULL token array
-      // (standard expression semantics), while the declarative fold yields
-      // 0L for it — align on the declarative value so both paths are
-      // bit-identical even on null-text rows
-      tokenized.select(col(idCol),
-        coalesce(call_function("simhash64", col("ws")), lit(0L)).as("simhash"))
-    } else declarativeSimhash(tokenized, idCol, t => xxhash64(t))
-  }
+  def simhashed(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    simhashedWith(docs, idCol, textCol, "simhash64")
 
-  /** The declarative vote/fold SimHash construction over a tokenized frame
-    * (`ws` attribute), parameterized by the per-token hash — ONE definition
-    * shared by [[simhashed]]'s fallback and [[simhashedPortable]] so the
-    * bit construction cannot diverge between d05 and d08.
+  /** A SimHash kernel over the tokenized text. coalesce: the kernel
+    * null-propagates a NULL token array (standard expression semantics),
+    * while the declarative fold yields 0L for it — align on the declarative
+    * value so both are bit-identical even on null-text rows.
     */
-  private def declarativeSimhash(tokenized: DataFrame, idCol: String,
-      tokenHash: Column => Column): DataFrame = {
+  private def simhashedWith(docs: DataFrame, idCol: String, textCol: String,
+      kernel: String): DataFrame =
+    spreadForCpu(docs)
+      .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("ws"))
+      .select(col(idCol), coalesce(call_function(kernel, col("ws")), lit(0L)).as("simhash"))
+
+  /** The declarative xxhash64 vote/fold construction — token hashes →
+    * 64-element vote vector → folded long, each on its own projection
+    * boundary so every intermediate is evaluated once per row. The
+    * comparison arm of d05's kernel≡declarative contract (the q30-style
+    * flag the driver gate asserts every round, complementing the
+    * DedupSpec test).
+    */
+  private[graft] def simhashedDeclarativeXx(docs: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame = {
     def bitVotes(h: Column): Column = array(
       (0 until 64).map(i =>
         when(shiftright(h, i).bitwiseAND(lit(1L)) =!= 0, lit(1L)).otherwise(lit(-1L))): _*)
     val folded = (0 until 64).map(i =>
       when(element_at(col("votes"), i + 1) > 0, lit(1L << i)).otherwise(lit(0L)))
       .reduce((a, b) => a.bitwiseOR(b))
-    tokenized
-      .select(col(idCol), transform(col("ws"), t => tokenHash(t)).as("hs"))
+    spreadForCpu(docs)
+      .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("ws"))
+      .select(col(idCol), transform(col("ws"), t => xxhash64(t)).as("hs"))
       .select(col(idCol), aggregate(col("hs"), array_repeat(lit(0L), 64),
         (acc, h) => zip_with(acc, bitVotes(h), _ + _)).as("votes"))
       .select(col(idCol), folded.as("simhash"))
   }
-
-  /** The declarative xxhash64 vote/fold path regardless of whether the
-    * native `simhash64` expression is registered — the comparison arm of
-    * d05's native≡declarative contract (the q30-style flag the driver gate
-    * asserts every round, complementing the 500-case DedupSpec test).
-    */
-  private[graft] def simhashedDeclarativeXx(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    declarativeSimhash(
-      spreadForCpu(docs).select(col(idCol), TextAnalysis.tokens(col(textCol)).as("ws")),
-      idCol, t => xxhash64(t))
 
   /** Hamming distance between two 64-bit simhashes. */
   def hammingDistance(a: Column, b: Column): Column =
@@ -607,23 +584,14 @@ object Dedup {
   def md5Low64(c: Column): Column =
     conv(substring(md5(c), 17, 16), 16, -10).cast(LongType)
 
-  /** 64-bit SimHash with the portable md5 token hash — same vote/fold
-    * construction as [[simhashed]]'s declarative path, different token
-    * hash. Exists so the simhash FAMILY has a full DuckDB-oracle-checked
+  /** 64-bit SimHash with the portable md5 token hash (`simhash64_md5`) —
+    * same vote/fold construction as [[simhashed]], different token hash.
+    * Exists so the simhash FAMILY has a full DuckDB-oracle-checked
     * representative (d08) alongside the fast xxhash64 one (d05, invariant-
     * tested only).
     */
-  def simhashedPortable(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tokenized = spreadForCpu(docs)
-      .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("ws"))
-    if (docs.sparkSession.catalog.functionExists("simhash64_md5")) {
-      // same coalesce rationale as simhashed(): the native expression
-      // null-propagates a NULL token array where the declarative fold
-      // yields 0L — align on the declarative value (DedupSpec)
-      tokenized.select(col(idCol),
-        coalesce(call_function("simhash64_md5", col("ws")), lit(0L)).as("simhash"))
-    } else declarativeSimhash(tokenized, idCol, md5Low64)
-  }
+  def simhashedPortable(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    simhashedWith(docs, idCol, textCol, "simhash64_md5")
 
   /** Connected components over an undirected edge list: every vertex gets
     * `cluster_id` = the minimum vertex id reachable from it. This is the
@@ -873,27 +841,17 @@ object Dedup {
       .where(size(col("ws")) >= 1)
     val n = size(col("ws")).cast(LongType)
     // 1-based cut positions p ∈ [w, n]: the w-gram ending at p hashes ≡ 0.
-    // Fused form: gram_hashes_md5(ws, w)(i) is the hash of the w-gram
-    // STARTING at token i+1, i.e. ENDING at p = i+w — so the cut set is a
-    // single indexed transform over the kernel's output (hash each gram
-    // once in one codegen'd pass), where the declarative fallback re-pays
-    // the five-node md5 chain + array_join + slice per POSITION inside an
-    // interpreted filter. The kernel call sits in HOF *argument* position,
-    // so it evaluates once per row, never per element. len<w → empty gram
-    // array → empty cuts, exactly the declarative otherwise-branch.
-    val cuts =
-      if (docs.sparkSession.catalog.functionExists("gram_hashes_md5"))
-        filter(
-          transform(call_function("gram_hashes_md5", col("ws"), lit(w)),
-            (h, i) => when(pmod(h, lit(divisor.toLong)) === 0,
-              (i + lit(w)).cast(LongType))),
-          c => c.isNotNull)
-      else when(n >= w,
-          filter(sequence(lit(w.toLong), n), p =>
-            pmod(md5Low64(array_join(
-              slice(col("ws"), (p - w + 1).cast("int"), lit(w)), " ")),
-              lit(divisor.toLong)) === 0))
-        .otherwise(array().cast("array<bigint>"))
+    // gram_hashes_md5(ws, w)(i) is the hash of the w-gram STARTING at
+    // token i+1, i.e. ENDING at p = i+w — so the cut set is a single
+    // indexed transform over the kernel's output (hash each gram once in
+    // one codegen'd pass; DedupSpec pins it against the per-position
+    // declarative md5Low64(array_join(slice(…))) filter). The kernel call
+    // sits in HOF *argument* position, so it evaluates once per row, never
+    // per element. len<w → empty gram array → empty cuts.
+    val cuts = filter(
+      transform(call_function("gram_hashes_md5", col("ws"), lit(w)),
+        (h, i) => when(pmod(h, lit(divisor.toLong)) === 0, (i + lit(w)).cast(LongType))),
+      c => c.isNotNull)
     val withCuts = toks.select(col(idCol), col("ws"), n.as("n_tokens"), cuts.as("cuts"))
     val starts = concat(array(lit(1L)), transform(col("cuts"), c => c + 1))
     val ends = concat(col("cuts"), array(col("n_tokens")))
@@ -1288,22 +1246,15 @@ object Dedup {
     */
   def winnowedFingerprints(docs: DataFrame, k: Int, w: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // gram stage: the fused kernel (graft.plans.GramHashesMd5) when
-    // registered — one codegen'd window-buffer loop instead of an
-    // interpreted transform paying the five-node md5 chain plus an
-    // array_join+slice allocation per POSITION (bit-identical, DedupSpec;
-    // the ≥ k filter guards the kernel's len<k → empty-array edge exactly
-    // like the declarative sequence(0, size-k) needs it)
-    val gramHashes: Column =
-      if (docs.sparkSession.catalog.functionExists("gram_hashes_md5"))
-        call_function("gram_hashes_md5", col("ws"), lit(k))
-      else
-        transform(sequence(lit(0), size(col("ws")) - k),
-          i => md5Low64(array_join(slice(col("ws"), i + 1, lit(k)), " ")))
+    // gram stage: the fused kernel (graft.plans.GramHashesMd5) — one
+    // codegen'd window-buffer loop instead of an interpreted transform
+    // paying the five-node md5 chain plus an array_join+slice allocation
+    // per POSITION (bit-identical, DedupSpec); the ≥ k filter keeps rows
+    // off the kernel's len<k → empty-array edge
     val grams = spreadForCpu(docs)
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("ws"))
       .where(size(col("ws")) >= k)
-      .select(col(idCol), gramHashes.as("gh"))
+      .select(col(idCol), call_function("gram_hashes_md5", col("ws"), lit(k)).as("gh"))
     val zero = struct(lit(-1).as("p"), lit(Long.MaxValue).as("v"))
     grams
       .select(col(idCol), size(col("gh")).cast(LongType).as("n_grams"),

@@ -48,20 +48,18 @@ object QualityClassifier {
   val Bias = -0.05
 
   /** feature string → its weight: portable md5-low64 hash, pmod into the
-    * weight table. `native` swaps the five-node declarative md5 chain for
-    * the fused [[graft.plans.Md5Low64]] kernel (bit-identical, DedupSpec) —
-    * the lambda still runs interpreted inside the HOFs below, but each
-    * feature's hash becomes one call with no intermediate strings.
+    * weight table. The hash is the fused [[graft.plans.Md5Low64]] kernel
+    * (bit-identical to the declarative [[Dedup.md5Low64]] chain,
+    * DedupSpec) — the lambda still runs interpreted inside the HOFs below,
+    * but each feature's hash is one call with no intermediate strings.
     */
-  private def featureWeight(f: Column, native: Boolean): Column =
+  private def featureWeight(f: Column): Column =
     element_at(typedLit(weights),
-      (pmod(if (native) call_function("md5_low64", f) else Dedup.md5Low64(f),
-        lit(Dim.toLong)) + 1).cast("int"))
+      (pmod(call_function("md5_low64", f), lit(Dim.toLong)) + 1).cast("int"))
 
   /** Strict left-to-right weight-sum over a feature array ATTRIBUTE. */
-  private def weightSum(feats: Column, native: Boolean): Column =
-    aggregate(transform(feats, f => featureWeight(f, native)),
-      lit(0.0), (acc, w) => acc + w)
+  private def weightSum(feats: Column): Column =
+    aggregate(transform(feats, f => featureWeight(f)), lit(0.0), (acc, w) => acc + w)
 
   /** Per-document classifier scores: `(idCol, n_feats, score, keep)`.
     * `score` = sigmoid of the 9-dp-rounded mean feature weight (+ bias),
@@ -71,14 +69,13 @@ object QualityClassifier {
     */
   def score(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val native = docs.sparkSession.catalog.functionExists("md5_low64")
     Par.spreadForCpu(docs)
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("ws"))
       .select(col(idCol), col("ws"),
         TextAnalysis.ngramsFromTokens(col("ws"), 2).as("bg"))
       .select(col(idCol),
         (size(col("ws")) + size(col("bg"))).cast(LongType).as("n_feats"),
-        (weightSum(col("ws"), native) + weightSum(col("bg"), native)).as("s"))
+        (weightSum(col("ws")) + weightSum(col("bg"))).as("s"))
       .select(col(idCol), col("n_feats"),
         when(col("n_feats") === 0, lit(null).cast("double"))
           .otherwise(round(lit(Bias) + col("s") / col("n_feats"), 9)).as("z"))

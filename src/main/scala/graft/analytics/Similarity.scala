@@ -45,26 +45,18 @@ object Similarity {
     when(na > 0 && nb > 0, dot(a, b) / (na * nb))
   }
 
-  /** Session-aware dot/norm: the native `vec_dot` expression (codegen'd,
-    * zero per-pair allocation — registered by graft.plans.GraftExtensions)
-    * when available, the declarative HOF form otherwise. Both accumulate
-    * strictly left-to-right in double, so results are bit-identical
-    * (equivalence asserted in SimilaritySpec).
+  /** The fused `vec_dot` kernel (codegen'd, zero per-pair allocation) that
+    * the operators below call. It and [[dot]] both accumulate strictly
+    * left-to-right in double, so results are bit-identical (equivalence
+    * asserted in SimilaritySpec).
     */
-  private def dotFn(df: DataFrame): (Column, Column) => Column =
-    if (df.sparkSession.catalog.functionExists("vec_dot"))
-      (a, b) => call_function("vec_dot", a, b)
-    else dot
+  private def vecDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
-  private def normFn(df: DataFrame): Column => Column = {
-    val d = dotFn(df)
-    a => sqrt(d(a, a))
-  }
+  private def vecNorm(a: Column): Column = sqrt(vecDot(a, a))
 
   /** Per-pair cosine from pre-materialized norms. */
-  private def cosineFromNorms(d: (Column, Column) => Column)(
-      aVec: Column, bVec: Column, na: Column, nb: Column): Column =
-    when(na > 0 && nb > 0, d(aVec, bVec) / (na * nb))
+  private def cosineFromNorms(aVec: Column, bVec: Column, na: Column, nb: Column): Column =
+    when(na > 0 && nb > 0, vecDot(aVec, bVec) / (na * nb))
 
   /** The 1-NN assignment ordering as a `max_by` SORT KEY: maximizing
     * `struct(coalesce(csim, -2), -cent_id)` is exactly the window order
@@ -94,22 +86,20 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, probes: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       round6: Boolean = false): DataFrame = {
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val p = broadcast(probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"),
-      nf(col(vecCol)).as("probe_norm")))
+      vecNorm(col(vecCol)).as("probe_norm")))
     val c = Par.spreadForCpu(corpus)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"),
-        nf(col(vecCol)).as("vec_norm"))
+        vecNorm(col(vecCol)).as("vec_norm"))
     // round6=true applies the repo's round-6-before-order convention to
     // the ranking score: two candidates whose true cosines differ only in
     // the last few ulps could otherwise order differently between Spark's
     // vec_dot and DuckDB's list_cosine_similarity (r15 ADVICE). s04 keeps
     // the historical unrounded ranking (its oracle shares it verbatim);
     // rank-set consumers (the s25 recall sweep) opt in.
-    val rank = if (round6) round(cf(col("probe_vec"), col("vec"),
+    val rank = if (round6) round(cosineFromNorms(col("probe_vec"), col("vec"),
         col("probe_norm"), col("vec_norm")), 6)
-      else cf(col("probe_vec"), col("vec"), col("probe_norm"), col("vec_norm"))
+      else cosineFromNorms(col("probe_vec"), col("vec"), col("probe_norm"), col("vec_norm"))
     val scored = c.join(p, col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"), rank.as("sim"))
     val w = org.apache.spark.sql.expressions.Window
@@ -153,25 +143,20 @@ object Similarity {
     * corpus; the probe side is broadcast.
     */
   /** Per-row array of `nTables` sign-pattern bucket keys — the native
-    * `lsh_sign_buckets` kernel when registered (graft.plans
-    * .GraftExtensions; one fused codegen'd loop), the declarative
-    * fallback otherwise (bit-identical, asserted in SimilaritySpec).
-    * Shared by the ANN probe path (lshTopK) and the semantic-cluster
-    * path (semanticClusters).
+    * `lsh_sign_buckets` kernel (one fused codegen'd loop), bit-identical to
+    * one [[signBits]] per table over `hyperplanes(planesPerTable, dim,
+    * seed + t)` (SimilaritySpec). Shared by the ANN probe path (lshTopK)
+    * and the semantic-cluster path (semanticClusters).
     */
-  private def bucketArrayFor(df: DataFrame, vecCol: String, nTables: Int,
+  private def bucketArrayFor(vecCol: String, nTables: Int,
       planesPerTable: Int, dim: Int, seed: Long): Column =
-    if (df.sparkSession.catalog.functionExists("lsh_sign_buckets"))
-      // coalesce: the native expression null-propagates a NULL vector,
-      // the declarative form yields an all-zero bucket array (null dots →
-      // no bits) — align on the declarative value so a null-vector row
-      // buckets identically on both paths
-      coalesce(
-        call_function("lsh_sign_buckets", col(vecCol),
-          lit(seed), lit(nTables), lit(planesPerTable), lit(dim)),
-        typedLit(Seq.fill(nTables)(0L)))
-    else array((0 until nTables).map(t =>
-      signBits(col(vecCol), hyperplanes(planesPerTable, dim, seed + t))): _*)
+    // coalesce: the kernel null-propagates a NULL vector, the declarative
+    // form yields an all-zero bucket array (null dots → no bits) — align
+    // on the declarative value so a null-vector row buckets identically
+    coalesce(
+      call_function("lsh_sign_buckets", col(vecCol),
+        lit(seed), lit(nTables), lit(planesPerTable), lit(dim)),
+      typedLit(Seq.fill(nTables)(0L)))
 
   def lshTopK(corpus: DataFrame, probes: DataFrame, k: Int,
       nTables: Int, planesPerTable: Int,
@@ -179,7 +164,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       multiProbe: Boolean = false): DataFrame = {
     def bucketArray: Column =
-      bucketArrayFor(corpus, vecCol, nTables, planesPerTable, dim, seed)
+      bucketArrayFor(vecCol, nTables, planesPerTable, dim, seed)
     def buckets(df: DataFrame, side: String): DataFrame =
       df.select(col(idCol).as(s"${side}_id"),
         posexplode(bucketArray).as(Seq("table", "bucket")))
@@ -200,15 +185,13 @@ object Similarity {
       .where(col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"))
       .distinct()
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val scored = candidates
       .join(broadcast(probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"),
-        nf(col(vecCol)).as("probe_norm"))), Seq("probe_id"))
+        vecNorm(col(vecCol)).as("probe_norm"))), Seq("probe_id"))
       .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"),
-        nf(col(vecCol)).as("vec_norm")), Seq("neighbor_id"))
+        vecNorm(col(vecCol)).as("vec_norm")), Seq("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        cf(col("probe_vec"), col("vec"),
+        cosineFromNorms(col("probe_vec"), col("vec"),
           col("probe_norm"), col("vec_norm")).as("sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
@@ -253,11 +236,10 @@ object Similarity {
       planesPerTable: Int, dim: Int, seed: Long = 42L, nBuckets: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     replaceTable(corpus.sparkSession, table)
-    val nf = normFn(corpus)
     Par.spreadForCpu(corpus)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"),
-        nf(col(vecCol)).as("vec_norm"),
-        posexplode(bucketArrayFor(corpus, vecCol, nTables, planesPerTable,
+        vecNorm(col(vecCol)).as("vec_norm"),
+        posexplode(bucketArrayFor(vecCol, nTables, planesPerTable,
           dim, seed)).as(Seq("tbl", "bucket")))
       .select(col("tbl"), col("bucket"), col("neighbor_id"),
         col("vec"), col("vec_norm"))
@@ -290,11 +272,9 @@ object Similarity {
       nTables: Int, planesPerTable: Int, dim: Int, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = probes.sparkSession
-    val nf = normFn(probes)
-    val cf = cosineFromNorms(dotFn(probes)) _
     val pBase = probes.select(col(idCol).as("probe_id"),
-      col(vecCol).as("probe_vec"), nf(col(vecCol)).as("probe_norm"),
-      posexplode(bucketArrayFor(probes, vecCol, nTables, planesPerTable,
+      col(vecCol).as("probe_vec"), vecNorm(col(vecCol)).as("probe_norm"),
+      posexplode(bucketArrayFor(vecCol, nTables, planesPerTable,
         dim, seed)).as(Seq("tbl", "bucket")))
     val bucketKeys = pBase.select(col("bucket")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
@@ -302,7 +282,7 @@ object Similarity {
     val scored = idx.join(broadcast(pBase), Seq("tbl", "bucket"))
       .where(col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        cf(col("probe_vec"), col("vec"),
+        cosineFromNorms(col("probe_vec"), col("vec"),
           col("probe_norm"), col("vec_norm")).as("sim"))
       .distinct()
     val w = org.apache.spark.sql.expressions.Window
@@ -386,16 +366,14 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var cSelCache: DataFrame = null
     try {
-      val nf = normFn(corpus)
-      val cf = cosineFromNorms(dotFn(corpus)) _
       val p = broadcast(probes.select(col(idCol).as("probe_id"),
-        col(vecCol).as("probe_vec"), nf(col(vecCol)).as("probe_norm")))
+        col(vecCol).as("probe_vec"), vecNorm(col(vecCol)).as("probe_norm")))
       // every round's scoring job reads this projection — persist it so
       // the parquet scan + per-row norm run once, not once per round
       // (the serving-layer (id, vec, norm) table an ANN deployment holds
       // hot; released before return)
       val cSel = corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("vec"), nf(col(vecCol)).as("vec_norm"))
+        col(vecCol).as("vec"), vecNorm(col(vecCol)).as("vec_norm"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       cSelCache = cSel
       // The walk state is probes × beam — CONTROL data (the BPE-argmax /
@@ -414,7 +392,7 @@ object Similarity {
             Seq("neighbor_id"))
           .join(p, Seq("probe_id"))
           .select(col("probe_id"), col("neighbor_id"),
-            round(cf(col("probe_vec"), col("vec"),
+            round(cosineFromNorms(col("probe_vec"), col("vec"),
               col("probe_norm"), col("vec_norm")), 6).as("sim"))
           .as[(Long, Long, Double)].collect()
       // lazy: the per-probe-entries path (s26) never runs this job
@@ -468,7 +446,7 @@ object Similarity {
         val scoredRows = cSel.join(broadcast(cand), Seq("neighbor_id"))
           .join(p, Seq("probe_id"))
           .select(col("probe_id"), col("neighbor_id"),
-            round(cf(col("probe_vec"), col("vec"),
+            round(cosineFromNorms(col("probe_vec"), col("vec"),
               col("probe_norm"), col("vec_norm")), 6).as("sim"))
           .as[(Long, Long, Double)].collect()
         val fresh = scoredRows.filter { case (pid, nid, _) =>
@@ -533,14 +511,12 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val n = corpus.count()
     require(n > 0, "hierarchicalBeamTopK: empty corpus")
     val stride = math.max(1L, math.ceil(math.sqrt(n.toDouble)).toLong)
     val coarse = corpus
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"),
-        nf(col(vecCol)).as("nv"))
+        vecNorm(col(vecCol)).as("nv"))
       .where(pmod(col("id"), lit(stride)) === 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -554,12 +530,12 @@ object Similarity {
         .join(coarse.select(col("id").as("dst"), col("vec").as("dv"), col("nv").as("dn")),
           col("src") =!= col("dst"))
         .select(col("src"), col("dst"),
-          // zero-norm pin: cf yields NULL on a zero vector here but the
+          // zero-norm pin: cosineFromNorms yields NULL on a zero vector here but the
           // DuckDB twin's list_cosine_similarity yields NaN (which DuckDB
           // ranks ABOVE all reals) — coalesce to -2 on both sides so a
           // zero-norm vector on a stride-multiple id ranks last in both
           // engines
-          round(coalesce(cf(col("sv"), col("dv"), col("sn"), col("dn")),
+          round(coalesce(cosineFromNorms(col("sv"), col("dv"), col("sn"), col("dn")),
             lit(-2.0)), 6).as("sim"))
         .withColumn("rn", row_number().over(wCoarse))
         .where(col("rn") <= coarseGraphK)
@@ -588,14 +564,14 @@ object Similarity {
       val probeIds = probes.select(col(idCol).cast("long")).as[Long]
         .collect().sorted
       val p = broadcast(probes.select(col(idCol).cast("long").as("probe_id"),
-        col(vecCol).as("probe_vec"), nf(col(vecCol)).as("probe_norm")))
+        col(vecCol).as("probe_vec"), vecNorm(col(vecCol)).as("probe_norm")))
       // one broadcast-filtered scoring job per descent round (candidates
       // are probes×nStarts×(2·coarseGraphK) pairs — control data)
       def score(cand: Seq[(Long, Long)]): Map[(Long, Long), Double] =
         coarse.join(broadcast(cand.toDF("probe_id", "id")), Seq("id"))
           .join(p, Seq("probe_id"))
           .select(col("probe_id"), col("id"),
-            round(coalesce(cf(col("probe_vec"), col("vec"),
+            round(coalesce(cosineFromNorms(col("probe_vec"), col("vec"),
               col("probe_norm"), col("nv")), lit(-2.0)), 6).as("sim"))
           .as[(Long, Long, Double)].collect()
           .map { case (pid, id, s) => (pid, id) -> s }.toMap
@@ -685,7 +661,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     Par.spreadForCpu(corpus)
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"),
-        normFn(corpus)(col(vecCol)).as("nv"))
+        vecNorm(col(vecCol)).as("nv"))
 
   /** One greedy round: the argmin of max-cosine-to-`centers` (each term
     * 6-dp-rounded, zero-norm rows pinned to -2 — below any real cosine;
@@ -801,11 +777,9 @@ object Similarity {
   private def semanticPairsCached(vecs: DataFrame, threshold: Double,
       nTables: Int, planesPerTable: Int, dim: Int, seed: Long,
       idCol: String, vecCol: String): (DataFrame, Seq[DataFrame]) = {
-    val nf = normFn(vecs)
-    val cf = cosineFromNorms(dotFn(vecs)) _
     val index = Par.spreadForCpu(vecs)
       .select(col(idCol).as("id"),
-        posexplode(bucketArrayFor(vecs, vecCol, nTables, planesPerTable, dim, seed))
+        posexplode(bucketArrayFor(vecCol, nTables, planesPerTable, dim, seed))
           .as(Seq("table", "bucket")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val candidates = index.select(col("table"), col("bucket"), col("id").as("a_id"))
@@ -819,7 +793,7 @@ object Similarity {
     // (and norms recomputed) once per side (~4 corpus scans total with the
     // CC vertex list; persisted it is 2)
     val sided = vecs.select(col(idCol).as("id"), col(vecCol).as("v"),
-      nf(col(vecCol)).as("nrm"))
+      vecNorm(col(vecCol)).as("nrm"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pairs = candidates
       .join(sided.select(col("id").as("a_id"), col("v").as("av"), col("nrm").as("an")),
@@ -827,7 +801,7 @@ object Similarity {
       .join(sided.select(col("id").as("b_id"), col("v").as("bv"), col("nrm").as("bn")),
         Seq("b_id"))
       .select(col("a_id"), col("b_id"),
-        round(cf(col("av"), col("bv"), col("an"), col("bn")), 6).as("sim"))
+        round(cosineFromNorms(col("av"), col("bv"), col("an"), col("bn")), 6).as("sim"))
       .where(col("sim") >= threshold)
     (pairs, Seq(index, sided))
   }
@@ -871,17 +845,16 @@ object Similarity {
   def ivfTopKWithCentroids(corpus: DataFrame, probes: DataFrame, k: Int,
       centroids: DataFrame, nProbe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val cents = broadcast(centroids
       .select(col("cent_id"), col("cent_vec"),
-        nf(col("cent_vec")).as("cent_norm")))
+        vecNorm(col("cent_vec")).as("cent_norm")))
     def assign(df: DataFrame, side: String, nNearest: Int): DataFrame = {
       val scored = df
-        .select(col(idCol).as(s"${side}_id"), col(vecCol).as("v"), nf(col(vecCol)).as("vn"))
+        .select(col(idCol).as(s"${side}_id"), col(vecCol).as("v"), vecNorm(col(vecCol)).as("vn"))
         .join(cents)
         .select(col(s"${side}_id"), col("cent_id"),
-          round(cf(col("v"), col("cent_vec"), col("vn"), col("cent_norm")), 6).as("csim"))
+          round(cosineFromNorms(col("v"), col("cent_vec"), col("vn"),
+            col("cent_norm")), 6).as("csim"))
       if (nNearest == 1)
         // corpus-sized side: partial+final max_by aggregate, never a
         // window sort over n×nCells rows (see assignOrd)
@@ -905,11 +878,11 @@ object Similarity {
       .select(col("probe_id"), col("neighbor_id"))
     val scored = candidates
       .join(broadcast(probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"),
-        nf(col(vecCol)).as("probe_norm"))), Seq("probe_id"))
+        vecNorm(col(vecCol)).as("probe_norm"))), Seq("probe_id"))
       .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"),
-        nf(col(vecCol)).as("vec_norm")), Seq("neighbor_id"))
+        vecNorm(col(vecCol)).as("vec_norm")), Seq("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        cf(col("probe_vec"), col("vec"),
+        cosineFromNorms(col("probe_vec"), col("vec"),
           col("probe_norm"), col("vec_norm")).as("sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
@@ -933,13 +906,12 @@ object Similarity {
       vecCol: String = "embedding"): Unit = {
     replaceTable(corpus.sparkSession, table)
     replaceTable(corpus.sparkSession, s"${table}_quantizer")
-    val nf = normFn(corpus)
     val centroids = corpus.orderBy(col(idCol)).limit(nCells)
       .select(col(idCol).as("cent_id"), col(vecCol).as("cent_vec"))
     centroids.write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_quantizer")
     val cents = broadcast(centroids
-      .select(col("cent_id"), col("cent_vec"), nf(col("cent_vec")).as("cent_norm")))
+      .select(col("cent_id"), col("cent_vec"), vecNorm(col("cent_vec")).as("cent_norm")))
     cellAssigned(corpus, cents, idCol, vecCol)
       // bucket-aligned write partitioning — one file per bucket (r18,
       // guide §6; see writeLshIndex)
@@ -955,14 +927,12 @@ object Similarity {
     */
   private def cellAssigned(corpus: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     Par.spreadForCpu(corpus)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"),
-        nf(col(vecCol)).as("vec_norm"))
+        vecNorm(col(vecCol)).as("vec_norm"))
       .join(cents)
       .select(col("neighbor_id"), col("vec"), col("vec_norm"), col("cent_id"),
-        round(cf(col("vec"), col("cent_vec"),
+        round(cosineFromNorms(col("vec"), col("cent_vec"),
           col("vec_norm"), col("cent_norm")), 6).as("csim"))
       .groupBy(col("neighbor_id"))
       .agg(
@@ -988,9 +958,8 @@ object Similarity {
   def appendToIvfIndex(delta: DataFrame, table: String, nBuckets: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = delta.sparkSession
-    val nf = normFn(delta)
     val cents = broadcast(spark.table(s"${table}_quantizer")
-      .select(col("cent_id"), col("cent_vec"), nf(col("cent_vec")).as("cent_norm")))
+      .select(col("cent_id"), col("cent_vec"), vecNorm(col("cent_vec")).as("cent_norm")))
     cellAssigned(delta, cents, idCol, vecCol)
       // bucket-aligned write partitioning — one file per bucket per append
       // (r18, guide §6; see writeLshIndex)
@@ -1013,19 +982,17 @@ object Similarity {
       nProbe: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val spark = probes.sparkSession
-    val nf = normFn(probes)
-    val cf = cosineFromNorms(dotFn(probes)) _
     val cents = broadcast(spark.table(s"${table}_quantizer")
-      .select(col("cent_id"), col("cent_vec"), nf(col("cent_vec")).as("cent_norm")))
+      .select(col("cent_id"), col("cent_vec"), vecNorm(col("cent_vec")).as("cent_norm")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
       .orderBy(col("csim").desc_nulls_last, col("cent_id").asc)
     val pAssign = probes
       .select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"),
-        nf(col(vecCol)).as("probe_norm"))
+        vecNorm(col(vecCol)).as("probe_norm"))
       .join(cents)
       .select(col("probe_id"), col("probe_vec"), col("probe_norm"), col("cent_id"),
-        round(cf(col("probe_vec"), col("cent_vec"),
+        round(cosineFromNorms(col("probe_vec"), col("cent_vec"),
           col("probe_norm"), col("cent_norm")), 6).as("csim"))
       .withColumn("r", row_number().over(w))
       .where(col("r") <= nProbe)
@@ -1036,7 +1003,7 @@ object Similarity {
     val scored = idx.join(broadcast(pAssign), Seq("cent_id"))
       .where(col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        cf(col("probe_vec"), col("vec"),
+        cosineFromNorms(col("probe_vec"), col("vec"),
           col("probe_norm"), col("vec_norm")).as("sim"))
     val wr = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
@@ -1068,13 +1035,12 @@ object Similarity {
     replaceTable(spark, table)
     replaceTable(spark, s"${table}_quantizer")
     replaceTable(spark, s"${table}_tombstones")
-    val nf = normFn(corpus)
     val centroids = corpus.orderBy(col(idCol)).limit(nCells)
       .select(col(idCol).as("cent_id"), col(vecCol).as("cent_vec"))
     centroids.write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_quantizer")
     val cents = broadcast(centroids
-      .select(col("cent_id"), col("cent_vec"), nf(col("cent_vec")).as("cent_norm")))
+      .select(col("cent_id"), col("cent_vec"), vecNorm(col("cent_vec")).as("cent_norm")))
     cellAssigned(corpus, cents, idCol, vecCol)
       // partition-aligned write: one file per inverted list instead of one
       // per (task, list) splinter (r18, guide §6; scale-adaptive — the
@@ -1127,19 +1093,17 @@ object Similarity {
   def ivfListsTopK(probes: DataFrame, table: String, k: Int, nProbe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = probes.sparkSession
-    val nf = normFn(probes)
-    val cf = cosineFromNorms(dotFn(probes)) _
     val cents = broadcast(spark.table(s"${table}_quantizer")
-      .select(col("cent_id"), col("cent_vec"), nf(col("cent_vec")).as("cent_norm")))
+      .select(col("cent_id"), col("cent_vec"), vecNorm(col("cent_vec")).as("cent_norm")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
       .orderBy(col("csim").desc_nulls_last, col("cent_id").asc)
     val pAssign = probes
       .select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"),
-        nf(col(vecCol)).as("probe_norm"))
+        vecNorm(col(vecCol)).as("probe_norm"))
       .join(cents)
       .select(col("probe_id"), col("probe_vec"), col("probe_norm"), col("cent_id"),
-        round(cf(col("probe_vec"), col("cent_vec"),
+        round(cosineFromNorms(col("probe_vec"), col("cent_vec"),
           col("probe_norm"), col("cent_norm")), 6).as("csim"))
       .withColumn("r", row_number().over(w))
       .where(col("r") <= nProbe)
@@ -1153,7 +1117,7 @@ object Similarity {
     val scored = idx.join(broadcast(pAssign), Seq("cent_id"))
       .where(col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        cf(col("probe_vec"), col("vec"),
+        cosineFromNorms(col("probe_vec"), col("vec"),
           col("probe_norm"), col("vec_norm")).as("sim"))
     val wr = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
@@ -1184,9 +1148,8 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = batch.sparkSession
     ensureStreamOps(spark, table)
-    val nf = normFn(spark.table(table))
     val cents = broadcast(spark.table(s"${table}_quantizer")
-      .select(col("cent_id"), col("cent_vec"), nf(col("cent_vec")).as("cent_norm")))
+      .select(col("cent_id"), col("cent_vec"), vecNorm(col("cent_vec")).as("cent_norm")))
     val adds = cellAssigned(batch.where(col("op") === "add"), cents, idCol, vecCol)
       .select(lit("add").as("op"), col("neighbor_id"), col("vec"),
         col("vec_norm"), col("cent_id"))
@@ -1236,19 +1199,17 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = probes.sparkSession
     ensureStreamOps(spark, table)
-    val nf = normFn(probes)
-    val cf = cosineFromNorms(dotFn(probes)) _
     val cents = broadcast(spark.table(s"${table}_quantizer")
-      .select(col("cent_id"), col("cent_vec"), nf(col("cent_vec")).as("cent_norm")))
+      .select(col("cent_id"), col("cent_vec"), vecNorm(col("cent_vec")).as("cent_norm")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
       .orderBy(col("csim").desc_nulls_last, col("cent_id").asc)
     val pAssign = probes
       .select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"),
-        nf(col(vecCol)).as("probe_norm"))
+        vecNorm(col(vecCol)).as("probe_norm"))
       .join(cents)
       .select(col("probe_id"), col("probe_vec"), col("probe_norm"), col("cent_id"),
-        round(cf(col("probe_vec"), col("cent_vec"),
+        round(cosineFromNorms(col("probe_vec"), col("cent_vec"),
           col("probe_norm"), col("cent_norm")), 6).as("csim"))
       .withColumn("r", row_number().over(w))
       .where(col("r") <= nProbe)
@@ -1275,7 +1236,7 @@ object Similarity {
     val scored = idx.join(broadcast(pAssign), Seq("cent_id"))
       .where(col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        cf(col("probe_vec"), col("vec"),
+        cosineFromNorms(col("probe_vec"), col("vec"),
           col("probe_norm"), col("vec_norm")).as("sim"))
     val wr = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
@@ -1419,10 +1380,8 @@ object Similarity {
   def kmeansCentroids(corpus: DataFrame, nCells: Int, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       replayableMeans: Boolean = false): DataFrame = {
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val vecs = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"),
-        nf(col(vecCol)).as("vn"))
+        vecNorm(col(vecCol)).as("vn"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var cents = corpus.orderBy(col(idCol)).limit(nCells)
       .select(col(idCol).as("cent_id"),
@@ -1430,13 +1389,13 @@ object Similarity {
       .localCheckpoint(eager = false)
     for (_ <- 1 to iters) {
       val cw = broadcast(cents.select(col("cent_id"), col("cent_vec"),
-        nf(col("cent_vec")).as("cn")))
+        vecNorm(col("cent_vec")).as("cn")))
       // per-vector argmax as a partial+final max_by aggregate — the
       // former per-iteration window forced a shuffle+SORT of n×nCells
       // scored rows every Lloyd round (see assignOrd)
       val assigned = vecs.crossJoin(cw)
         .select(col("vec_id"), col("cent_id"),
-          round(cf(col("v"), col("cent_vec"), col("vn"), col("cn")), 6).as("csim"))
+          round(cosineFromNorms(col("v"), col("cent_vec"), col("vn"), col("cn")), 6).as("csim"))
         .groupBy(col("vec_id"))
         .agg(max_by(col("cent_id"), assignOrd(col("csim"), col("cent_id"))).as("cent_id"))
       val members = assigned
@@ -1487,15 +1446,13 @@ object Similarity {
     */
   def clusterBalancedSample(corpus: DataFrame, centroids: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val cents = broadcast(centroids.select(col("cent_id"), col("cent_vec"),
-      nf(col("cent_vec")).as("cent_norm")))
+      vecNorm(col("cent_vec")).as("cent_norm")))
     val assigned = Par.spreadForCpu(corpus)
-      .select(col(idCol), col(vecCol).as("v"), nf(col(vecCol)).as("vn"))
+      .select(col(idCol), col(vecCol).as("v"), vecNorm(col(vecCol)).as("vn"))
       .join(cents)
       .select(col(idCol), col("cent_id"),
-        round(cf(col("v"), col("cent_vec"), col("vn"), col("cent_norm")), 6).as("csim"))
+        round(cosineFromNorms(col("v"), col("cent_vec"), col("vn"), col("cent_norm")), 6).as("csim"))
       // argmax via max_by: map-side partial aggregation, no window sort
       // of the n×nCells scored rows (see assignOrd)
       .groupBy(col(idCol))
@@ -1742,20 +1699,18 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(dim % m == 0, s"dim=$dim must split into m=$m subspaces")
     val sub = dim / m
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val cents = broadcast(corpus.orderBy(col(idCol)).limit(nCells)
       .select(col(idCol).as("cent_id"), pqDvec(col(vecCol)).as("cv"))
-      .select(col("cent_id"), col("cv"), nf(col("cv")).as("cent_norm")))
+      .select(col("cent_id"), col("cv"), vecNorm(col("cv")).as("cent_norm")))
     // assignment carries the residual out: rv = v − cv of the chosen cell
     def assign(df: DataFrame, side: String, nNearest: Int): DataFrame = {
       val scored = df
         .select(col(idCol).as(s"${side}_id"), pqDvec(col(vecCol)).as("v"))
-        .withColumn("vn", nf(col("v")))
+        .withColumn("vn", vecNorm(col("v")))
         .join(cents)
         .select(col(s"${side}_id"), col("cent_id"),
           zip_with(col("v"), col("cv"), (a, b) => a - b).as("rv"),
-          round(cf(col("v"), col("cv"), col("vn"), col("cent_norm")), 6)
+          round(cosineFromNorms(col("v"), col("cv"), col("vn"), col("cent_norm")), 6)
             .as("csim"))
       if (nNearest == 1)
         // corpus-sized side: the winning (cent_id, residual) rides one
@@ -1844,16 +1799,14 @@ object Similarity {
     */
   def cosineNearDupPairs(corpus: DataFrame, probes: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding", roundDp: Int = 6): DataFrame = {
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val p = broadcast(probes.select(col(idCol).as("a_id"), col(vecCol).as("a_vec"),
-      nf(col(vecCol)).as("a_norm")))
+      vecNorm(col(vecCol)).as("a_norm")))
     val c = Par.spreadForCpu(corpus)
       .select(col(idCol).as("b_id"), col(vecCol).as("b_vec"),
-        nf(col(vecCol)).as("b_norm"))
+        vecNorm(col(vecCol)).as("b_norm"))
     c.join(p, col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
-        round(cf(col("a_vec"), col("b_vec"),
+        round(cosineFromNorms(col("a_vec"), col("b_vec"),
           col("a_norm"), col("b_norm")), roundDp).as("sim"))
       .where(col("sim") >= threshold)
   }
@@ -1897,19 +1850,17 @@ object Similarity {
       if (checkpoint) df.localCheckpoint(eager = false) else df
     val cand = cp(bruteForceTopK(corpus, probes, kCand, idCol, vecCol)
       .select(col("probe_id"), col("neighbor_id"), round(col("sim"), 6).as("rel")))
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val vecs = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"))
     val cv = cand.join(vecs, Seq("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"), col("vec"),
-        nf(col("vec")).as("nrm"))
+        vecNorm(col("vec")).as("nrm"))
     val cc = cv.select(col("probe_id"), col("neighbor_id").as("a_id"),
         col("vec").as("a_vec"), col("nrm").as("a_norm"))
       .join(cv.select(col("probe_id"), col("neighbor_id").as("b_id"),
         col("vec").as("b_vec"), col("nrm").as("b_norm")), Seq("probe_id"))
       .where(col("a_id") =!= col("b_id"))
       .select(col("probe_id"), col("a_id"), col("b_id"),
-        round(cf(col("a_vec"), col("b_vec"),
+        round(cosineFromNorms(col("a_vec"), col("b_vec"),
           col("a_norm"), col("b_norm")), 6).as("cc"))
     val ccCp = cp(cc)
     val w = org.apache.spark.sql.expressions.Window
@@ -2059,15 +2010,13 @@ object Similarity {
     val cand = psim.withColumn("cr", row_number().over(wc))
       .where(col("cr") <= nCand)
       .select(col("probe_id"), col("neighbor_id"))
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val scored = cand
       .join(broadcast(probes.select(col(idCol).as("probe_id"),
-        col(vecCol).as("probe_vec"), nf(col(vecCol)).as("probe_norm"))), Seq("probe_id"))
+        col(vecCol).as("probe_vec"), vecNorm(col(vecCol)).as("probe_norm"))), Seq("probe_id"))
       .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"),
-        nf(col(vecCol)).as("vec_norm")), Seq("neighbor_id"))
+        vecNorm(col(vecCol)).as("vec_norm")), Seq("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        cf(col("probe_vec"), col("vec"), col("probe_norm"), col("vec_norm")).as("sim"))
+        cosineFromNorms(col("probe_vec"), col("vec"), col("probe_norm"), col("vec_norm")).as("sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
       .orderBy(col("sim").desc, col("neighbor_id").asc)
@@ -2096,17 +2045,15 @@ object Similarity {
   def hardNegatives(corpus: DataFrame, probes: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val p = broadcast(probes.select(col(idCol).as("probe_id"),
       col(labelCol).as("probe_label"), col(vecCol).as("probe_vec"),
-      nf(col(vecCol)).as("probe_norm")))
+      vecNorm(col(vecCol)).as("probe_norm")))
     val c = Par.spreadForCpu(corpus)
       .select(col(idCol).as("neighbor_id"), col(labelCol).as("neg_label"),
-        col(vecCol).as("vec"), nf(col(vecCol)).as("vec_norm"))
+        col(vecCol).as("vec"), vecNorm(col(vecCol)).as("vec_norm"))
     val scored = c.join(p, col("probe_label") =!= col("neg_label"))
       .select(col("probe_id"), col("neighbor_id"), col("neg_label"),
-        cf(col("probe_vec"), col("vec"),
+        cosineFromNorms(col("probe_vec"), col("vec"),
           col("probe_norm"), col("vec_norm")).as("sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
@@ -2195,16 +2142,14 @@ object Similarity {
     val cand = ham.withColumn("cr", row_number().over(wc))
       .where(col("cr") <= nCand)
       .select(col("probe_id"), col("neighbor_id"))
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val scored = cand
       .join(broadcast(probes.select(col(idCol).as("probe_id"),
-        col(vecCol).as("probe_vec"), nf(col(vecCol)).as("probe_norm"))),
+        col(vecCol).as("probe_vec"), vecNorm(col(vecCol)).as("probe_norm"))),
         Seq("probe_id"))
       .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"),
-        nf(col(vecCol)).as("vec_norm")), Seq("neighbor_id"))
+        vecNorm(col(vecCol)).as("vec_norm")), Seq("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        cf(col("probe_vec"), col("vec"), col("probe_norm"), col("vec_norm"))
+        cosineFromNorms(col("probe_vec"), col("vec"), col("probe_norm"), col("vec_norm"))
           .as("sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
@@ -2222,15 +2167,13 @@ object Similarity {
     */
   private def assignCells(corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val cents = broadcast(centroids.select(col("cent_id"), col("cent_vec"),
-      nf(col("cent_vec")).as("cent_norm")))
+      vecNorm(col("cent_vec")).as("cent_norm")))
     Par.spreadForCpu(corpus)
-      .select(col(idCol), col(vecCol).as("v"), nf(col(vecCol)).as("vn"))
+      .select(col(idCol), col(vecCol).as("v"), vecNorm(col(vecCol)).as("vn"))
       .join(cents)
       .select(col(idCol), col("v"), col("vn"), col("cent_id"),
-        round(cf(col("v"), col("cent_vec"), col("vn"), col("cent_norm")), 6)
+        round(cosineFromNorms(col("v"), col("cent_vec"), col("vn"), col("cent_norm")), 6)
           .as("csim"))
       // winning (cell, csim) and the row's own (v, vn) — constant within
       // the group — ride ONE max_by struct: partial+final aggregate, no
@@ -2266,7 +2209,6 @@ object Similarity {
     */
   def semDeDup(corpus: DataFrame, centroids: DataFrame, tau: Double,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val asgn = assignCells(corpus, centroids, idCol, vecCol)
     val a = asgn.select(col("cent_id"), col(idCol).as("x_id"),
       col("v").as("xv"), col("vn").as("xn"), col("csim").as("xc"))
@@ -2275,7 +2217,7 @@ object Similarity {
     val dropped = a.join(b, Seq("cent_id"))
       .where(col("yc") < col("xc") ||
         (col("yc") === col("xc") && col("y_id") < col("x_id")))
-      .where(round(cf(col("xv"), col("yv"), col("xn"), col("yn")), 6) >= tau)
+      .where(round(cosineFromNorms(col("xv"), col("yv"), col("xn"), col("yn")), 6) >= tau)
       .select(col("x_id")).distinct()
     asgn.join(dropped, col(idCol) === col("x_id"), "left")
       .select(col(idCol), col("cent_id"), col("csim"),
@@ -2352,11 +2294,9 @@ object Similarity {
       tokensPerDoc: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(tokensPerDoc > 0 && k > 0, "tokensPerDoc and k must be positive")
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val toks = Par.spreadForCpu(corpus).select(
       expr(s"cast($idCol as bigint) div $tokensPerDoc").as("doc"),
-      col(vecCol).as("vec"), nf(col(vecCol)).as("nrm"),
+      col(vecCol).as("vec"), vecNorm(col(vecCol)).as("nrm"),
       col(idCol).cast("long").as("tok"))
     val q = broadcast(toks
       .where(col("doc").isin(probeDocs: _*))
@@ -2364,7 +2304,7 @@ object Similarity {
         col("vec").as("qvec"), col("nrm").as("qnrm")))
     val mx = toks.join(q, col("probe_doc") =!= col("doc"))
       .groupBy(col("probe_doc"), col("qtok"), col("doc"))
-      .agg(max(round(cf(col("qvec"), col("vec"),
+      .agg(max(round(cosineFromNorms(col("qvec"), col("vec"),
         col("qnrm"), col("nrm")), 6)).as("m"))
     val sc = mx.groupBy(col("probe_doc"), col("doc"))
       .agg(sum(col("m").cast("decimal(18,6)")).cast("double").as("score"))
@@ -2401,41 +2341,39 @@ object Similarity {
     require(probeCounts.distinct.size == probeCounts.size,
       s"duplicate probe counts produce duplicate curve rows: $probeCounts")
     val maxProbe = probeCounts.max
-    val nf = normFn(corpus)
-    val cf = cosineFromNorms(dotFn(corpus)) _
     val cents = broadcast(corpus.orderBy(col(idCol)).limit(nCells)
       .select(col(idCol).as("cent_id"), col(vecCol).as("cent_vec"))
-      .select(col("cent_id"), col("cent_vec"), nf(col("cent_vec")).as("cent_norm")))
+      .select(col("cent_id"), col("cent_vec"), vecNorm(col("cent_vec")).as("cent_norm")))
     val cAssign = Par.spreadForCpu(corpus)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("v"), nf(col(vecCol)).as("vn"))
+      .select(col(idCol).as("neighbor_id"), col(vecCol).as("v"), vecNorm(col(vecCol)).as("vn"))
       .join(cents)
       .select(col("neighbor_id"), col("cent_id"),
-        round(cf(col("v"), col("cent_vec"), col("vn"), col("cent_norm")), 6).as("csim"))
+        round(cosineFromNorms(col("v"), col("cent_vec"), col("vn"), col("cent_norm")), 6).as("csim"))
       .groupBy(col("neighbor_id"))
       .agg(max_by(col("cent_id"), assignOrd(col("csim"), col("cent_id"))).as("cent_id"))
     val wCell = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
       .orderBy(col("csim").desc_nulls_last, col("cent_id").asc)
     val pAssign = broadcast(probes
-      .select(col(idCol).as("probe_id"), col(vecCol).as("v"), nf(col(vecCol)).as("vn"))
+      .select(col(idCol).as("probe_id"), col(vecCol).as("v"), vecNorm(col(vecCol)).as("vn"))
       .join(cents)
       .select(col("probe_id"), col("cent_id"),
-        round(cf(col("v"), col("cent_vec"), col("vn"), col("cent_norm")), 6).as("csim"))
+        round(cosineFromNorms(col("v"), col("cent_vec"), col("vn"), col("cent_norm")), 6).as("csim"))
       .withColumn("cell_rank", row_number().over(wCell).cast("long"))
       .where(col("cell_rank") <= maxProbe)
       .select(col("probe_id"), col("cent_id"), col("cell_rank")))
     val scored = cAssign.join(pAssign, Seq("cent_id"))
       .where(col("probe_id") =!= col("neighbor_id"))
       .join(broadcast(probes.select(col(idCol).as("probe_id"),
-        col(vecCol).as("probe_vec"), nf(col(vecCol)).as("probe_norm"))), Seq("probe_id"))
+        col(vecCol).as("probe_vec"), vecNorm(col(vecCol)).as("probe_norm"))), Seq("probe_id"))
       .join(corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("nvec"), nf(col(vecCol)).as("nnorm")), Seq("neighbor_id"))
+        col(vecCol).as("nvec"), vecNorm(col(vecCol)).as("nnorm")), Seq("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"), col("cell_rank"),
         // round-6-before-order on the candidate ranking AND the exact
         // baseline (round6 = true below): rank-k membership must not
         // hinge on cross-engine ulp noise (r15 ADVICE; the cell
         // assignment above already followed the convention)
-        round(cf(col("probe_vec"), col("nvec"),
+        round(cosineFromNorms(col("probe_vec"), col("nvec"),
           col("probe_norm"), col("nnorm")), 6).as("sim"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val exact = bruteForceTopK(corpus, probes, k, idCol, vecCol, round6 = true)
@@ -2473,13 +2411,11 @@ object Similarity {
     */
   def semanticChunks(corpus: DataFrame, tokensPerDoc: Int, minCos: Double,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val d = dotFn(corpus)
-    val nf = normFn(corpus)
     val v = Par.spreadForCpu(corpus).select(
       call_function("div", col(idCol).cast("long"), lit(tokensPerDoc.toLong)).as("doc"),
       pmod(col(idCol).cast("long"), lit(tokensPerDoc.toLong)).as("pos"),
       col(vecCol).as("vec"))
-      .withColumn("nv", nf(col("vec")))
+      .withColumn("nv", vecNorm(col("vec")))
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc")).orderBy(col("pos"))
     val adj = v
@@ -2488,7 +2424,7 @@ object Similarity {
         lag(col("nv"), 1).over(byDoc).as("pn"))
       .select(col("doc"), col("pos"),
         round(when(col("pn") > 0 && col("nv") > 0,
-          d(col("pv"), col("vec")) / (col("pn") * col("nv"))), 6).as("adj_cos"))
+          vecDot(col("pv"), col("vec")) / (col("pn") * col("nv"))), 6).as("adj_cos"))
     adj
       .withColumn("is_break",
         when(col("adj_cos").isNotNull, col("adj_cos") < minCos))

@@ -32,11 +32,6 @@ object Tar {
   private def zeros(n: Column): Column =
     call_function("repeat", lit("00"), n.cast("int"))
 
-  /** Byte sum of a hex string's bytes [0, nBytes) — the checksum fold. */
-  private def hexByteSum(h: Column, nBytes: Int): Column =
-    aggregate(sequence(lit(0), lit(nBytes - 1)), lit(0L),
-      (a, i) => a + conv(h.substr(i * 2 + 1, lit(2)), 16, 10).cast(LongType))
-
   /** Byte sum of an ASCII string column (ord fold). */
   private def ordSum(s: Column): Column =
     aggregate(sequence(lit(1), length(s)), lit(0L),
@@ -126,22 +121,15 @@ object Tar {
     val p = col("payload")
     // checksum = byte sum of the 512-byte header with the chksum field
     // read as 8 spaces. The native byte_range_sum kernel runs it as one
-    // codegen'd loop over the raw bytes; the declarative twin (hex fold)
-    // computes the identical value (AHashSpec equivalence) but re-walks
-    // the lambda tree — including the embedded hex(substr) header
+    // codegen'd loop over the raw bytes; the declarative hex fold it
+    // replaced computes the identical value (AHashSpec equivalence) but
+    // re-walks the lambda tree — including the embedded hex(substr) header
     // projection — once per byte, which put the map-only walk at 50.8 s
     // for 5 000 rows at sf0.1 (r17 optimization round measurement).
-    val native = tars.sparkSession.catalog.functionExists("byte_range_sum")
     def computedChk(off: Column): Column =
-      if (native)
-        call_function("byte_range_sum", p, off + 1L, lit(512L)) -
-          call_function("byte_range_sum", p, off + 149L, lit(8L)) +
-          lit(8L * 0x20L)
-      else {
-        val hdr = hex(p.substr(off.cast("int") + 1, lit(512)))
-        hexByteSum(hdr, 512) - hexByteSum(hdr.substr(lit(297), lit(16)), 8) +
-          lit(8L * 0x20L)
-      }
+      call_function("byte_range_sum", p, off + 1L, lit(512L)) -
+        call_function("byte_range_sum", p, off + 149L, lit(8L)) +
+        lit(8L * 0x20L)
     def entry(off: Column): Column = {
       val computed = computedChk(off)
       val nameRaw = decode(p.substr(off.cast("int") + 1, lit(100)), "UTF-8")

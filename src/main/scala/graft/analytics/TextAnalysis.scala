@@ -186,41 +186,25 @@ object TextAnalysis {
 
   /** Rolling polynomial hash over the token stream (base 1000003 over
     * per-token xxhash64) — an order-sensitive 64-bit document fingerprint,
-    * computed in one pass per row.
+    * computed in one pass per row. The reference definition of the fused
+    * `rolling_hash64` kernel the queries call (bit-identical —
+    * TextAnalysisSpec).
     */
   def rollingHashFromTokens(toks: Column): Column =
     aggregate(toks, lit(0L), (acc, t) => acc * lit(1000003L) + xxhash64(t))
   def rollingHash(text: Column): Column = rollingHashFromTokens(tokens(text))
-
-  /** Session-aware rolling hash: the fused native `rolling_hash64`
-    * expression when GraftExtensions is registered (one codegen'd
-    * multiply-add loop; bit-identical — TextAnalysisSpec), else the
-    * interpreted HOF fallback above.
-    */
-  def rollingHashFromTokens(spark: org.apache.spark.sql.SparkSession, toks: Column): Column =
-    if (spark.catalog.functionExists("rolling_hash64")) call_function("rolling_hash64", toks)
-    else rollingHashFromTokens(toks)
 
   /** Rolling hash over the PORTABLE md5-low64 token hash — the same
     * base-1000003 multiply-add fold as [[rollingHashFromTokens]] with
     * [[Dedup.md5Low64]] substituted for xxhash64, so any engine with md5
     * and 128-bit integer arithmetic can reproduce the fingerprint
     * bit-for-bit (the t07 oracle path; cf. d08/d10 for the simhash and
-    * minhash families). Production uses the xxhash64 variant.
+    * minhash families). Production uses the xxhash64 variant. The
+    * reference definition of the fused `rolling_hash64_md5` kernel
+    * (bit-identical, null-token edge included — TextAnalysisSpec).
     */
   def rollingHashPortableFromTokens(toks: Column): Column =
     aggregate(toks, lit(0L), (acc, t) => acc * lit(1000003L) + Dedup.md5Low64(t))
-
-  /** Session-aware portable rolling hash: the fused `rolling_hash64_md5`
-    * kernel when GraftExtensions is registered (one codegen'd loop;
-    * bit-identical INCLUDING the null-token-poisons-to-NULL convention —
-    * TextAnalysisSpec), else the interpreted HOF fallback above.
-    */
-  def rollingHashPortableFromTokens(spark: org.apache.spark.sql.SparkSession,
-      toks: Column): Column =
-    if (spark.catalog.functionExists("rolling_hash64_md5"))
-      call_function("rolling_hash64_md5", toks)
-    else rollingHashPortableFromTokens(toks)
 
   // ── PII scrubbing (training-data hygiene) ──
 

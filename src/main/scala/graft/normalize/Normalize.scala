@@ -88,8 +88,15 @@ object Normalize {
     "plr" -> "plr_per_thousand", "plrDl" -> "plrDl_per_thousand",
     "maxPlrUl" -> "maxPlrUl_per_thousand", "maxPlrDl" -> "maxPlrDl_per_thousand")
 
-  def perfEnvelope(notifId: Column, info: Column, ctx: Ctx, now: Column,
-      parseBitrate: Column => Column = parseBitrateMbps): Column = {
+  /** The fused native bitrate parser (one compiled-regex pass per metric
+    * field, value-identical to [[graft.functions.NetFunctions.parseBitrateMbps]]
+    * — NetFunctionsSpec): the hottest per-row expression of the ingest
+    * path, pinned in the executed plan by PlanAuditSpec (q20).
+    */
+  private def parseBitrate(c: Column): Column =
+    call_function("parse_bitrate_mbps", c.cast(StringType))
+
+  def perfEnvelope(notifId: Column, info: Column, ctx: Ctx, now: Column): Column = {
     val ueIp = info.getField("ueIpAddr")
     val ipv4 = truthyStr(ueIp.getField("ipv4Addr"))
     // elif: ipv6 only when ipv4 is NOT truthy (receiver.py:92–95)
@@ -186,13 +193,6 @@ object Normalize {
   private def explodedEnvelopes(enriched: DataFrame, now: Column): DataFrame = {
     val ctx = Ctx(col("snssai_sst"), col("snssai_sd"), col("dnn"))
     val en = col("en")
-    // the fused native bitrate parser (one compiled-regex pass per metric
-    // field, value-identical — NetFunctionsSpec) when registered; this is
-    // the hottest per-row expression of the ingest path
-    val parseBitrate: Column => Column =
-      if (enriched.sparkSession.catalog.functionExists("parse_bitrate_mbps"))
-        c => call_function("parse_bitrate_mbps", c.cast(StringType))
-      else parseBitrateMbps
     // null ELEMENTS inside an infos array drop before the envelope build:
     // a null info would otherwise fabricate a context-tags-only record
     // (the subscription ctx alone passes hasAnyTag). The reference 500s
@@ -207,7 +207,7 @@ object Normalize {
     val recArray =
       when(en.getField("event") === "PERF_DATA",
         transform(infos("perfDataInfos"),
-          i => perfEnvelope(col("notifId"), i, ctx, now, parseBitrate)))
+          i => perfEnvelope(col("notifId"), i, ctx, now)))
       .when(en.getField("event") === "UE_MOBILITY",
         transform(infos("ueMobilityInfos"),
           i => mobilityEnvelope(col("notifId"), i, ctx, now)))

@@ -8,28 +8,72 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * to add Catalyst extensions without forking the session builder. Register
   * with `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
-  * Injects the native expressions (below) and ONE optimizer rule
-  * ([[NativeKernelSubstitution]] — declarative rolling-hash folds execute
-  * the fused kernel automatically). No custom `SparkStrategy`: no operator
-  * has outgrown the DataFrame vocabulary (SURVEY §4), and the rule
-  * rewrites an expression, not an operator.
+  * Injects the native expressions below and nothing else: no optimizer
+  * rule and no custom `SparkStrategy` — no operator has outgrown the
+  * DataFrame vocabulary (SURVEY §4). The engine's one kernel mechanism is
+  * to call these functions by name (`call_function`), so every session
+  * must come from [[graft.GraftSession.builder]], which installs this
+  * class; each kernel's declarative twin stays in the analytics code as
+  * the reference its bit-identity spec compares against.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // optimizer rule: declarative rolling-hash folds execute the fused
-    // native kernel automatically (see NativeKernelSubstitution)
-    ext.injectOptimizerRule(_ => NativeKernelSubstitution)
+    // ── the three sketch kernels, once per base-hash family: simhash64,
+    // rolling_hash64, minhash_sig over xxhash64, and their _md5 names over
+    // the PORTABLE md5-low64 hash. The md5 family is fused in place of the
+    // declarative md5→hex→conv chains that back every oracle-checked
+    // dedup/fingerprint operator (d08/d10/d11/t07…): those run the
+    // five-node chain per TOKEN or per SHINGLE inside interpreted
+    // higher-order functions; each kernel is one codegen'd loop,
+    // bit-identical (DedupSpec / TextAnalysisSpec). ──
+    for (base <- BaseHash.all) {
+      val family = if (base == BaseHash.Xx64) "xxhash64" else "md5-low64"
 
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(
-        classOf[SimHash64].getName, null, "simhash64",
-        "_FUNC_(tokens) - 64-bit SimHash of a string array (xxhash64 votes).",
-        ""),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "simhash64 takes 1 argument")
-        SimHash64(children.head)
-      }))
+      ext.injectFunction((
+        FunctionIdentifier("simhash64" + base.suffix),
+        new ExpressionInfo(
+          classOf[SimHash64].getName, null, "simhash64" + base.suffix,
+          s"_FUNC_(tokens) - 64-bit SimHash of a string array ($family votes).",
+          ""),
+        (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+          require(children.length == 1, s"simhash64${base.suffix} takes 1 argument")
+          SimHash64(children.head, base)
+        }))
+
+      ext.injectFunction((
+        FunctionIdentifier("rolling_hash64" + base.suffix),
+        new ExpressionInfo(
+          classOf[RollingHash64].getName, null, "rolling_hash64" + base.suffix,
+          "_FUNC_(tokens) - order-sensitive rolling polynomial fingerprint " +
+            s"(base 1000003 over $family).",
+          ""),
+        (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+          require(children.length == 1, s"rolling_hash64${base.suffix} takes 1 argument")
+          RollingHash64(children.head, base)
+        }))
+
+      // minhash_sig[_md5](tokens, n, k, seed): n/k/seed must be foldable
+      // literals — the universal-hash constants are generated once at plan
+      // time, from the same source for both families.
+      ext.injectFunction((
+        FunctionIdentifier("minhash_sig" + base.suffix),
+        new ExpressionInfo(
+          classOf[MinHashSig].getName, null, "minhash_sig" + base.suffix,
+          "_FUNC_(tokens, n, k, seed) - k-element MinHash signature over word n-gram " +
+            s"shingles ($family base).",
+          ""),
+        (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+          require(children.length == 4, s"minhash_sig${base.suffix} takes 4 arguments")
+          require(children.drop(1).forall(_.foldable),
+            s"minhash_sig${base.suffix} n/k/seed must be literals")
+          def longArg(i: Int): Long =
+            children(i).eval(null) match { case num: Number => num.longValue() }
+          val n = longArg(1).toInt
+          val k = longArg(2).toInt
+          val seed = longArg(3)
+          MinHashSig(children.head, n, MinHashSig.abConstants(k, seed), base)
+        }))
+    }
 
     ext.injectFunction((
       FunctionIdentifier("parse_bitrate_mbps"),
@@ -51,37 +95,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
         require(children.length == 2, "vec_dot takes 2 arguments")
         VecDot(children(0), children(1))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash64"),
-      new ExpressionInfo(
-        classOf[RollingHash64].getName, null, "rolling_hash64",
-        "_FUNC_(tokens) - order-sensitive rolling polynomial fingerprint (base 1000003 over xxhash64).",
-        ""),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "rolling_hash64 takes 1 argument")
-        RollingHash64(children.head)
-      }))
-
-    // minhash_sig(tokens, n, k, seed): n/k/seed must be foldable literals —
-    // the universal-hash constants are generated once at plan time.
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(
-        classOf[MinHashSig].getName, null, "minhash_sig",
-        "_FUNC_(tokens, n, k, seed) - k-element MinHash signature over word n-gram shingles.",
-        ""),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 4, "minhash_sig takes 4 arguments")
-        require(children.drop(1).forall(_.foldable),
-          "minhash_sig n/k/seed must be literals")
-        def longArg(i: Int): Long =
-          children(i).eval(null) match { case num: Number => num.longValue() }
-        val n = longArg(1).toInt
-        val k = longArg(2).toInt
-        val seed = longArg(3)
-        MinHashSig(children.head, n, MinHashSig.abConstants(k, seed))
       }))
 
     ext.injectFunction((
@@ -132,13 +145,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           children(0), children(1))
       }))
 
-    // ── the PORTABLE (md5-low64) hash family ──
-    // Fused twins of the declarative md5→hex→conv chains that back every
-    // oracle-checked dedup/fingerprint operator (d08/d10/d11/d23/d31/t07/
-    // t12…). The declarative forms run the five-node chain per TOKEN or
-    // per SHINGLE inside interpreted higher-order functions; each twin is
-    // one codegen'd loop, bit-identical (DedupSpec / TextAnalysisSpec).
-
     ext.injectFunction((
       FunctionIdentifier("md5_low64"),
       new ExpressionInfo(
@@ -148,48 +154,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
         require(children.length == 1, "md5_low64 takes 1 argument")
         Md5Low64(children.head)
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("simhash64_md5"),
-      new ExpressionInfo(
-        classOf[SimHash64Md5].getName, null, "simhash64_md5",
-        "_FUNC_(tokens) - 64-bit SimHash of a string array (md5-low64 votes; portable twin of simhash64).",
-        ""),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "simhash64_md5 takes 1 argument")
-        SimHash64Md5(children.head)
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash64_md5"),
-      new ExpressionInfo(
-        classOf[RollingHash64Md5].getName, null, "rolling_hash64_md5",
-        "_FUNC_(tokens) - order-sensitive rolling polynomial fingerprint (base 1000003 over md5-low64).",
-        ""),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "rolling_hash64_md5 takes 1 argument")
-        RollingHash64Md5(children.head)
-      }))
-
-    // minhash_sig_md5(tokens, n, k, seed): same literal contract and
-    // (a,b)-constant source as minhash_sig — only the base hash differs.
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig_md5"),
-      new ExpressionInfo(
-        classOf[MinHashSigMd5].getName, null, "minhash_sig_md5",
-        "_FUNC_(tokens, n, k, seed) - k-element MinHash signature over word n-gram shingles (md5-low64 base).",
-        ""),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 4, "minhash_sig_md5 takes 4 arguments")
-        require(children.drop(1).forall(_.foldable),
-          "minhash_sig_md5 n/k/seed must be literals")
-        def longArg(i: Int): Long =
-          children(i).eval(null) match { case num: Number => num.longValue() }
-        val n = longArg(1).toInt
-        val k = longArg(2).toInt
-        val seed = longArg(3)
-        MinHashSigMd5(children.head, n, MinHashSig.abConstants(k, seed))
       }))
 
     // gram_hashes_md5(tokens, k): k must be a foldable literal.

@@ -2,44 +2,49 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** k-element MinHash signature of a token array in ONE fused pass:
-  * word-n-gram shingling, per-shingle xxhash64 (Spark's default seed 42),
-  * and the k-way running minimum of the universal hashes
+  * word-n-gram shingling, the per-shingle base hash (`minhash_sig`:
+  * xxhash64 with Spark's default seed 42; `minhash_sig_md5`: md5-low64 —
+  * [[BaseHash]]), and the k-way running minimum of the universal hashes
   * h_i(x) = a_i·x + b_i — without materializing the shingle array, the
   * base-hash array, or a per-shingle accumulator array.
   *
-  * Bit-identical to the declarative chain in
-  * [[graft.analytics.Dedup.minhashSignatures]] (shinglesFromTokens →
-  * transform(xxhash64) → minhashFromHashes; equivalence asserted in
-  * DedupSpec): `concat_ws` null-skip inside a shingle window is replicated
-  * via `UTF8String.concatWs`, fewer-than-n tokens yield the all-MaxValue
-  * signature, and `array_distinct` needs no replication because duplicate
-  * shingles cannot change a minimum. The declarative form evaluates three
+  * Bit-identical to the declarative chain (shinglesFromTokens →
+  * transform(base hash) → [[graft.analytics.Dedup.minhashFromHashes]];
+  * equivalence asserted in DedupSpec for both families): `concat_ws`
+  * null-skip inside a shingle window is replicated via
+  * `UTF8String.concatWs` (so neither family sees a null shingle),
+  * fewer-than-n tokens yield the all-MaxValue signature, and
+  * `array_distinct` needs no replication because duplicate shingles
+  * cannot change a minimum. The declarative form evaluates three
   * interpreted higher-order functions allocating O(shingles + k·shingles)
   * per row; this is one codegen'd loop with a k-long accumulator.
   */
-case class MinHashSig(child: Expression, n: Int, ab: Array[Long])
+case class MinHashSig(child: Expression, n: Int, ab: Array[Long], base: BaseHash)
     extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig requires array<string> input, got ${other.catalogString}")
+      s"$prettyName requires array<string> input, got ${other.catalogString}")
   }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
+  override def prettyName: String = "minhash_sig" + base.suffix
+  // the family is in the name; keep it out of the argument list
+  override protected def stringArgs: Iterator[Any] = Iterator(child, n, ab)
 
   override protected def nullSafeEval(input: Any): Any =
-    MinHashSig.sig(input.asInstanceOf[ArrayData], n, ab)
+    MinHashSig.sig(input.asInstanceOf[ArrayData], n, ab, base)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val abRef = ctx.addReferenceObj("ab", ab, "long[]")
-    defineCodeGen(ctx, ev, c => s"graft.plans.MinHashSig.sig($c, $n, $abRef)")
+    val baseRef = ctx.addReferenceObj("base", base, classOf[BaseHash].getName)
+    defineCodeGen(ctx, ev, c => s"graft.plans.MinHashSig.sig($c, $n, $abRef, $baseRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
@@ -62,7 +67,7 @@ object MinHashSig {
   /** Shared kernel for interpreted eval and generated code. Overflow wraps
     * exactly like Spark's non-ANSI long arithmetic in the declarative form.
     */
-  def sig(ws: ArrayData, n: Int, ab: Array[Long]): ArrayData = {
+  def sig(ws: ArrayData, n: Int, ab: Array[Long], base: BaseHash): ArrayData = {
     val k = ab.length / 2
     val out = new Array[Long](k)
     java.util.Arrays.fill(out, Long.MaxValue)
@@ -77,8 +82,7 @@ object MinHashSig {
           j += 1
         }
         // concatWs skips null inputs — exactly concat_ws(" ", …)
-        val s = UTF8String.concatWs(Space, parts: _*)
-        val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes(), 42L)
+        val h = base.hash(UTF8String.concatWs(Space, parts: _*))
         var p = 0
         while (p < k) {
           val v = h * ab(2 * p) + ab(2 * p + 1)

@@ -2,45 +2,46 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
-/** 64-bit SimHash of a token array as a native Catalyst expression.
+/** 64-bit SimHash of a token array as a native Catalyst expression —
+  * `simhash64` over xxhash64, `simhash64_md5` over md5-low64 ([[BaseHash]]).
   *
-  * Semantically identical to the declarative construction in
-  * [[graft.analytics.Dedup.simhashed]] (per-token xxhash64 with Spark's
-  * default seed 42, ±1 bit votes, positive-vote bits set — equivalence is
-  * asserted in DedupSpec), but evaluated in ONE fused per-row loop with
-  * full whole-stage-codegen support. The higher-order-function form
-  * allocates a 64-element vote array per TOKEN and runs interpreted
-  * (HOFs are CodegenFallback); this runs at memory bandwidth — the
-  * round-3 measurement was 5.8 s → sub-second for d05 at sf0.1.
+  * Semantically identical to the declarative construction (per-token base
+  * hash, ±1 bit votes, positive-vote bits set — equivalence asserted in
+  * DedupSpec for both families, including each family's null-token
+  * convention), but evaluated in ONE fused per-row loop with full
+  * whole-stage-codegen support. The higher-order-function form allocates
+  * a 64-element vote array per TOKEN and runs interpreted (HOFs are
+  * CodegenFallback); this runs at memory bandwidth — the round-3
+  * measurement was 5.8 s → sub-second for d05 at sf0.1.
   *
   * This is the engine's one custom-Expression showcase: built-ins express
   * every reference semantic (SURVEY §2-I), so Catalyst extension is
   * reserved for exactly this case — a hot per-row kernel the built-in
   * vocabulary can only express interpretively.
   */
-case class SimHash64(child: Expression)
-    extends UnaryExpression {
+case class SimHash64(child: Expression, base: BaseHash) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 requires array<string> input, got ${other.catalogString}")
+      s"$prettyName requires array<string> input, got ${other.catalogString}")
   }
   override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
+  override def prettyName: String = "simhash64" + base.suffix
+  // the family is in the name; keep it out of the argument list
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    SimHash64.hashTokens(arr)
+  override protected def nullSafeEval(input: Any): Any =
+    SimHash64.hashTokens(input.asInstanceOf[ArrayData], base)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val baseRef = ctx.addReferenceObj("base", base, classOf[BaseHash].getName)
+    defineCodeGen(ctx, ev, c => s"graft.plans.SimHash64.hashTokens($c, $baseRef)")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.SimHash64.hashTokens($c)")
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
@@ -48,17 +49,21 @@ case class SimHash64(child: Expression)
 
 object SimHash64 {
   /** One-pass SimHash kernel, shared by interpreted eval and generated
-    * code. Null tokens are skipped (the tokenizer emits none).
+    * code. A null token votes `base.simhashNullVote` on every bit.
     */
-  def hashTokens(arr: ArrayData): Long = {
+  def hashTokens(arr: ArrayData, base: BaseHash): Long = {
     val votes = new Array[Int](64)
     val n = arr.numElements()
     var i = 0
     while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val s: UTF8String = arr.getUTF8String(i)
-        // exactly Spark's xxhash64(string) with its default seed 42
-        val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes(), 42L)
+      if (arr.isNullAt(i)) {
+        val v = base.simhashNullVote
+        if (v != 0) {
+          var b = 0
+          while (b < 64) { votes(b) += v; b += 1 }
+        }
+      } else {
+        val h = base.hash(arr.getUTF8String(i))
         var b = 0
         while (b < 64) {
           if (((h >>> b) & 1L) != 0L) votes(b) += 1 else votes(b) -= 1

@@ -99,9 +99,11 @@ object Sinks {
   /** E1: the reference's global `_discovered_fields` set — every metric key
     * ever seen (receiver.py:45–46, 394–397). The two array payloads count as
     * the keys "trajectory"/"comms" (they are `metrics` dict keys there).
-    * Batch form; the streaming form is `dropDuplicates` over the same
-    * projection (durable via checkpoint — strictly better than the
-    * reference's in-memory set, SURVEY.md H4).
+    * The same frame serves both modes: on a streaming frame `distinct()`
+    * is a watermark-free `dropDuplicates` — the same unbounded distinct-set
+    * state, made durable by the checkpoint, strictly better than the
+    * reference's in-memory set, which is lost on restart (SURVEY.md H4) —
+    * and an append-mode query emits each field name once, when first seen.
     */
   def discoveredFields(records: DataFrame): DataFrame =
     records

@@ -51,23 +51,6 @@ object Stream {
       }
       .start()
 
-  /** H4 — the streaming form of the discovered-metric-fields accumulation
-    * (reference's global `_discovered_fields` set, receiver.py:45–46,
-    * 394–397): `dropDuplicates` with no watermark is the same unbounded
-    * distinct-set state, made durable by the checkpoint — strictly better
-    * than the reference's in-memory set, which is lost on restart.
-    * Input: a streaming envelope frame; output: append-mode stream of
-    * newly-discovered field names.
-    */
-  def discoveredFieldsStream(envelopes: DataFrame): DataFrame =
-    envelopes
-      .select(explode(map_keys(col("metrics"))).as("field"))
-      .unionByName(envelopes.where(col("trajectory").isNotNull)
-        .select(lit("trajectory").as("field")))
-      .unionByName(envelopes.where(col("comms").isNotNull)
-        .select(lit("comms").as("field")))
-      .dropDuplicates("field")
-
   /** Full streaming pipeline to envelopes (for sinks that want the flat
     * record stream rather than the batched Kafka shape).
     */

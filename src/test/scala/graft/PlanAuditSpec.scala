@@ -46,6 +46,10 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("Exchange rangepartitioning"),
       s"expected only the output-order shuffle, plan:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"enrich join must broadcast, plan:\n$p")
+    // the bitrate parser — the hottest per-row ingest expression — runs
+    // as the fused kernel, never as the declarative regexp_extract chain
+    assert(p.contains("parse_bitrate_mbps"), s"expected the fused bitrate kernel, plan:\n$p")
+    assert(!p.contains("regexp_extract"), s"declarative bitrate parser in the plan:\n$p")
   }
 
   test("q01: aggregation is partial+final hash aggregate") {

@@ -110,7 +110,7 @@ class StreamingSpec extends SparkSpec {
     // not), so the second run resumes the SAME dedup state.
     val collected = scala.collection.mutable.ArrayBuffer.empty[String]
     def run(): Unit = {
-      val q = Stream.discoveredFieldsStream(
+      val q = graft.sinks.Sinks.discoveredFields(
         Stream.envelopeStream(Stream.fileSource(spark, srcDir), Fixtures.subscriptions(spark)))
         .writeStream
         .option("checkpointLocation", ckptDir)

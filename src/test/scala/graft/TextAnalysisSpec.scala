@@ -91,32 +91,16 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("native rolling_hash64 expression ≡ declarative HOF aggregate") {
     assert(spark.catalog.functionExists("rolling_hash64"))
-    // NativeKernelSubstitution rewrites the declarative idiom to the
-    // kernel — for a NON-vacuous equivalence the declarative side must
-    // run with the rule excluded (which also proves the rule is
-    // excludable by name for A/B measurement)
-    val exclKey = "spark.sql.optimizer.excludedRules"
-    val ruleName = "graft.plans.NativeKernelSubstitution"
-    def withRuleExcluded[A](f: => A): A = {
-      val prior = spark.conf.getOption(exclKey)
-      spark.conf.set(exclKey, (prior.toSeq :+ ruleName).mkString(","))
-      try f finally prior match {
-        case Some(v) => spark.conf.set(exclKey, v)
-        case None => spark.conf.unset(exclKey)
-      }
-    }
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ws"))
     val native = real.select(col("doc_id"),
-        TextAnalysis.rollingHashFromTokens(spark, col("ws")).as("fp"))
+        call_function("rolling_hash64", col("ws")).as("fp"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val declarative = withRuleExcluded {
-      val df = real.select(col("doc_id"),
-        TextAnalysis.rollingHashFromTokens(col("ws")).as("fp"))
-      assert(!df.queryExecution.optimizedPlan.toString.contains("rolling_hash64"),
-        "excluded rule must leave the declarative fold intact")
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
+    val df = real.select(col("doc_id"),
+      TextAnalysis.rollingHashFromTokens(col("ws")).as("fp"))
+    assert(!df.queryExecution.optimizedPlan.toString.contains("rolling_hash64"),
+      "the declarative side must run the declarative fold")
+    val declarative = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(native.size === declarative.size)
     assert(native === declarative)
     // edge parity: empty array → 0; null element → seed contribution
@@ -125,10 +109,8 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("id", "ws")
     val n = edge.select(col("id"), call_function("rolling_hash64", col("ws")).as("fp"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val d = withRuleExcluded {
-      edge.select(col("id"), TextAnalysis.rollingHashFromTokens(col("ws")).as("fp"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
+    val d = edge.select(col("id"), TextAnalysis.rollingHashFromTokens(col("ws")).as("fp"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(n === d)
     assert(n(0L) === 0L)
   }
@@ -138,7 +120,7 @@ class TextAnalysisSpec extends SparkSpec {
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ws"))
     val native = real.select(col("doc_id"),
-        TextAnalysis.rollingHashPortableFromTokens(spark, col("ws")).as("fp"))
+        call_function("rolling_hash64_md5", col("ws")).as("fp"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val declarative = real.select(col("doc_id"),
         TextAnalysis.rollingHashPortableFromTokens(col("ws")).as("fp"))
@@ -160,30 +142,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(n === d)
     assert(n(0L) === 0L)
     assert(n(1L) === null)
-  }
-
-  test("NativeKernelSubstitution: exact idiom rewrites; near-misses do not") {
-    // data-dependent tokens — a constant frame folds to a LocalRelation
-    // before the plan can be inspected
-    val df = spark.range(2).select(col("id"),
-      split(concat(lit("alpha beta gamma r"), col("id").cast("string")), " ").as("ws"))
-    val hit = df.select(TextAnalysis.rollingHashFromTokens(col("ws")).as("fp"))
-    assert(hit.queryExecution.optimizedPlan.toString.contains("rolling_hash64"),
-      s"the canonical fold must rewrite:\n${hit.queryExecution.optimizedPlan}")
-    // same values either way
-    assert(hit.collect().map(_.getLong(0)).toSeq ===
-      df.select(call_function("rolling_hash64", col("ws")))
-        .collect().map(_.getLong(0)).toSeq)
-    // near-miss: a different base constant must NOT rewrite
-    val miss = df.select(
-      aggregate(col("ws"), lit(0L), (acc, t) => acc * lit(999983L) + xxhash64(t)).as("fp"))
-    assert(!miss.queryExecution.optimizedPlan.toString.contains("rolling_hash64"),
-      "a different base is a different hash - must not rewrite")
-    // near-miss: portable md5 fold (no xxhash64) must NOT rewrite
-    val md5Miss = df.select(
-      TextAnalysis.rollingHashPortableFromTokens(col("ws")).as("fp"))
-    assert(!md5Miss.queryExecution.optimizedPlan.toString.contains("rolling_hash64"),
-      "the md5 family must not rewrite")
   }
 
   test("qualityScore composition matches its published formula") {
