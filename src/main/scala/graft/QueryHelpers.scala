@@ -34,11 +34,6 @@ private[graft] object QueryHelpers {
       "github.io", "example.com")
 
 
-  /** Shared q37/q38 tail: quality score → per-language rank → top-k quota
-    * (ONE definition so the two curation queries and their oracles cannot
-    * drift from each other). Package-private: ScaleSmoke times the same
-    * chain at blown-up corpus sizes.
-    */
   /** The ONE quality-scoring projection behind q37/q38/q42 (the Spark twin
     * of [[qualityScoreCtes]]): (doc_id, lang, quality, n_tokens), with the
     * tokenizer materialized on its own projection boundary per the HOF
@@ -53,6 +48,10 @@ private[graft] object QueryHelpers {
         TextAnalysis.qualityScoreFromTokens(col("text"), col("ws")).as("quality"),
         size(col("ws")).cast("bigint").as("n_tokens"))
 
+  /** Shared q37/q38 tail: quality score → per-language rank → top-k quota
+    * (ONE definition so the two curation queries and their oracles cannot
+    * drift from each other).
+    */
   private[graft] def qualityQuota(docs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("lang"))
       .orderBy(col("quality").desc, col("doc_id"))

@@ -3,26 +3,34 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.analytics.{Dedup, Similarity}
+import graft.analytics.Dedup
 
-/** Scale-behavior smoke: blow the sf corpus up N× via id-shifted unions and
-  * run the operators whose cost model matters at 100 TB — per-row hashing
-  * (simhash fast + portable), MinHash LSH candidate generation, dedup
-  * cluster resolution via BOTH the LSH-candidate scale path and the
-  * exact shingle-pair path (so the gap between them is a recorded
-  * number), the q38 curation chain, and LSH ANN top-k. Prints one JSON
-  * line of seconds per op.
-  *
-  * The id-shifted union is deliberately adversarial for dedup: every
-  * document gains N-1 exact copies, so duplicate mass — the O(bands·c²)
-  * candidate term and the connected-components edge count — grows
-  * quadratically in N while the corpus grows linearly. Per-row ops must
-  * scale ~linearly in N; pair ops are expected to scale with duplicate
-  * mass, NOT corpus size (the documented operator cost model). Run:
-  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.ScaleSmoke 20"
+/** Adversarial scale probes: the regimes [[ScaleSweep]] cannot express.
+  * ScaleSweep is the catalog-wide scaling gate; its copies are salted, so
+  * duplicate mass grows ×N like a real corpus. Here the sf corpus is
+  * blown up N× by id-shifted unions instead: every document gains N−1
+  * exact copies, so duplicate mass — the O(bands·c²) candidate term and
+  * the connected-components edge count — grows ×N² while the corpus grows
+  * ×N. The eight probes:
+  *  - `minhash_lsh`, `dedup_clusters_lsh`, `dedup_clusters_exact`: LSH
+  *    candidates and both cluster paths under that duplicate mass. The
+  *    exact path's gap over the LSH path is the recorded reason
+  *    `dedupClustersApprox` is the 100 TB shape.
+  *  - `cc_chain_contracted`: one path component of 25k×N nodes. It backs
+  *    `connectedComponents`' refusal, which points the caller at the
+  *    contracted variant.
+  *  - `skew_join_plain`, `skew_join_salted`: a 90%-hot join key, plain
+  *    and through `SkewJoin.saltedInnerJoin` (no catalog query calls it).
+  *  - `driver_budget`: `require`s that the driver-coordinated operators'
+  *    collected state stays inside its documented bounds.
+  *  - `streaming_state_scale`: RocksDB `transformWithState` state over
+  *    50k×N keys (no catalog twin).
+  * Prints one JSON line of seconds and rows per op. Run:
+  *   SPARK_GRAFT_SF_DIR=<sf dir> sbt "runMain graft.ScaleSmoke 20"
   * Optional args after the multiplier select single ops by name
   * (isolated re-measurement — neighbor ops' GC/JIT pollution showed up
-  * as a 1.4× swing on minhash_lsh in the round-8 run).
+  * as a 1.4× swing on minhash_lsh in the round-8 run). An unknown op name
+  * prints a warning and exits 2.
   */
 object ScaleSmoke {
 
@@ -78,10 +86,6 @@ object ScaleSmoke {
         System.err.println(s"[scale-smoke] $name: ${results(name)._1}s rows=${results(name)._2}")
       }
 
-    run("simhash_native")(Dedup.simhashed(docs))
-    run("simhash_portable")(Dedup.simhashedPortable(docs))
-    run("minhash_signatures")(
-      Dedup.minhashSignatures(docs, n = 3, k = 64))
     run("minhash_lsh")(
       Dedup.minhashCandidates(docs, n = 3, k = 64, bands = 16, threshold = 0.9))
     // the scale path: clusters from LSH candidates (the exact-pair variant's
@@ -98,353 +102,8 @@ object ScaleSmoke {
     run("dedup_clusters_exact")(
       Dedup.dedupClusters(docs, n = 3, threshold = 0.9, maxDf = 1000L)
         .where(col("is_survivor")))
-    // q38's flagship curation chain (exact-dedup survivor election →
-    // quality scoring → per-language quota) on the blown-up corpus:
-    // survivor election collapses the mult× duplicate mass back to ~the
-    // base corpus before the scoring/quota tail
-    run("curation_pipeline") {
-      val survivors = Dedup.byFingerprint(docs).select(col("keep_id").as("doc_id"))
-      SparkEntry.qualityQuota(docs.join(survivors, Seq("doc_id"), "left_semi"), k = 20)
-    }
-    // decontamination at blowup: the contamination set stays the ORIGINAL
-    // 20 benchmark stand-ins while every corpus doc gains mult−1 copies —
-    // the broadcast shingle universe is constant-size, so cost must track
-    // the corpus scan, not the duplicate mass
-    run("decontaminate")(
-      Dedup.contaminationFlags(docs, docs.where(col("doc_id") < 20), n = 3))
-    // the bloom scale path (d16): same constant-size contamination set,
-    // but folded into a fixed-size sketch instead of a broadcast array —
-    // cost must track the corpus scan like decontaminate above, with the
-    // sketch build a constant prefix
-    run("decontaminate_bloom")(
-      Dedup.contaminationFlagsBloom(spark, docs,
-        docs.where(col("doc_id") < 20), n = 3,
-        estItems = 1L << 14, numBits = 1L << 18))
-    // incremental dedup (d17) with the corpus blown up mult× and the
-    // batch FIXED at the base corpus: the timed region covers both the
-    // corpus fingerprint-index pass (linear in corpus, one scan+agg —
-    // amortized away in production where the index persists) and the
-    // batch classify (join + window, constant here); the delta between
-    // mults is the index pass, the floor is the true incremental cost
-    run("incremental_dedup")(
-      Dedup.incrementalDedup(docs,
-        docs0.withColumn("doc_id", col("doc_id") + mult.toLong * docShift)))
-    // incremental SPAN dedup (d20) under the same regime — corpus blown
-    // up mult×, batch fixed: the timed region = corpus gram-index build
-    // (linear in corpus; persisted/bucketed in production) + the batch
-    // probe (explode + window + keyed join, constant). The delta between
-    // mults is the index pass, the floor is the true per-batch cost.
-    run("incremental_spans")(
-      Dedup.incrementalSpanCoverage(docs,
-        docs0.withColumn("doc_id", col("doc_id") + mult.toLong * docShift), n = 8))
-    // duplicate-span coverage (d15) under blowup: the id-shifted copies
-    // make every 8-gram cross-document duplicated, so the dup semi-join
-    // passes ~every gram start — positional-gram rows grow linearly in
-    // mult while the gram-key groupBy key space stays constant (the
-    // original corpus's distinct grams); the lag-window union then runs
-    // over near-total coverage, the worst case for the window stage
-    run("dup_spans")(
-      Dedup.duplicateSpanCoverage(docs, n = 8))
-    // the xxhash64 production family: identical coverage, 8-byte shuffle
-    // keys instead of 32-char md5 hex — the md5-vs-xx gap is the recorded
-    // price of oracle portability (same trade d04/d11 document)
-    run("dup_spans_xx")(
-      Dedup.duplicateSpanCoverage(docs, n = 8, portableHash = false))
-    run("lsh_topk")(
-      Similarity.lshTopK(vecs, vecs.where(col("vec_id") < 10), k = 5,
-        nTables = 16, planesPerTable = 4, dim = 64))
-    // s21 at blowup, split by cost term (first measured as one op: ×27
-    // wall for ×4 corpus — ALL of it the fixed-plane graph build, whose
-    // bucket self-join is quadratic in occupancy; the walk never moved).
-    //  - beam_graph_build: the write-once index term under the PRODUCTION
-    //    sizing — planesPerTable grows log₂(mult), so bucket occupancy
-    //    (and per-bucket pairs per row) stays ~constant and the build
-    //    must track mult ~linearly. The fixed-plane quadratic is already
-    //    on record as knn_graph above (the s13 pair-op cost model).
-    //  - beam_walk: the per-query term on a PREBUILT (localCheckpointed)
-    //    graph — per round one broadcast-filtered pass over edges + one
-    //    over the corpus scoring only never-seen candidates, driver
-    //    state probes×beam. Wall must stay ~flat in mult: two linear
-    //    scans per round, frontier-bound work.
-    val beamPlanes = 8 + (math.log(mult.toDouble) / math.log(2.0)).ceil.toInt
-    run("beam_graph_build")(
-      Similarity.lshTopK(vecs, vecs, k = 8, nTables = 8,
-        planesPerTable = beamPlanes, dim = 64))
-    if (shouldRun("beam_walk")) {
-      // built OUTSIDE the timed walk (localCheckpoint survives the
-      // run-helper's clearCache), at the same occupancy-bounded sizing
-      val edges = Similarity.lshTopK(vecs, vecs, k = 8, nTables = 8,
-          planesPerTable = beamPlanes, dim = 64)
-        .select(col("probe_id").as("src"), col("neighbor_id").as("dst"))
-        .localCheckpoint(eager = true)
-      run("beam_walk")(
-        Similarity.beamSearchOnGraph(vecs, vecs.where(col("vec_id") < 10),
-          edges, k = 5, beamWidth = 16, rounds = 4))
-      // s26's two-level walk on the SAME prebuilt graph: adds the coarse
-      // level (a √(mult·n)-vertex brute kNN — (√n)² = n candidate pairs,
-      // LINEAR in corpus — plus nStarts·descentRounds driver-coordinated
-      // scoring jobs on control-sized candidate sets). Wall must track
-      // beam_walk plus a ~linear coarse-build term — the entry layer must
-      // never introduce a pair-space term the flat walk lacks.
-      run("hier_entry_walk")(
-        Similarity.hierarchicalBeamOnGraph(vecs, vecs.where(col("vec_id") < 10),
-          edges, k = 5, beamWidth = 16, rounds = 4, descentRounds = 4,
-          coarseGraphK = 4))
-    }
-    // s22 at blowup: the probe token set is CONSTANT (2 docs × 8 tokens),
-    // so the BNLJ scoring pass and both aggregates must scale linearly
-    // with the streamed corpus — wall tracks mult, never a pair blowup
-    // (probe×corpus fan-out is the linear-in-corpus term by design).
-    run("maxsim")(
-      Similarity.maxSimTopK(vecs, probeDocs = Seq(0L, 1L), k = 5,
-        tokensPerDoc = 8))
-    // t32's trainer at blowup: the corpus grows mult× but the EM loop's
-    // working set is the DISTINCT-WORD table (Zipf-bounded — id-shifted
-    // copies add zero new words), so wall must track the two corpus
-    // passes (word-frequency + encode), never mult× the EM rounds.
-    run("unigram") {
-      val (pieces, segs) = graft.analytics.Unigram.train(docs)
-      graft.analytics.Unigram.encode(docs, pieces, segs)
-    }
-    // the distributed EM loop ALONE at a FORCED regime (r15 verdict task
-    // 7): word-frequency table prebuilt OUTSIDE the timed region
-    // (localCheckpoint), maxDriverVocab=0 disables the driver regime —
-    // so this times exactly the substring-table build + EM/Viterbi rounds
-    // + final segmentation pass, no corpus scan and no encode. The
-    // working set is the DISTINCT-WORD table (Zipf-bounded; id-shifted
-    // copies add zero new words), so wall must flatten as mult grows.
-    if (shouldRun("unigram_em_dist")) {
-      val wf = graft.analytics.Bpe.wordFreqs(docs, "text")
-        .localCheckpoint(eager = true)
-      run("unigram_em_dist") {
-        val (pieces, _) = graft.analytics.Unigram.trainFromWordFreqs(wf,
-          maxDriverVocab = 0L)
-        pieces
-      }
-    }
-    // s05's quantizer training at blowup, PRODUCTION mean path: the
-    // centroid mean is a partial-aggregable avg keyed by (cell, dim) with
-    // constant per-group state — cost must track the assignment scan
-    // (broadcast-NLJ over the corpus), NOT cell population. The r10 shape
-    // (per-(cell,dim) collect_list) carried buffers that grew with the
-    // mult× membership; this datapoint is the receipt that it no longer
-    // does.
-    run("kmeans_train")(
-      Similarity.kmeansCentroids(vecs, nCells = 16, iters = 2))
-    // incremental NEAR-dup gate (d21) under the d17 regime — corpus
-    // blown up mult×, batch FIXED at the base corpus: the timed region =
-    // the corpus signature/band index build (one pass — the persisted
-    // artifact of a rolling ingest) + the batch-sized probe. The delta
-    // between mults is the index pass; the floor is the true per-ingest
-    // cost, which must track the batch, never the corpus.
-    run("incremental_neardup")(
-      Dedup.incrementalNearDup(docs,
-        docs0.withColumn("doc_id", col("doc_id") + mult.toLong * docShift),
-        n = 3, k = 64, bands = 16, threshold = 0.9))
-    // PQ ADC search (s07) at blowup: codebook collect, corpus encode and
-    // probe tables are pure projections (codebook is a plan literal);
-    // the scoring join carries m ints per corpus row. Cost must track
-    // the corpus scan — there is no pair term to blow up.
-    run("pq_topk")(
-      Similarity.pqTopK(vecs, vecs.where(col("vec_id") < 10), k = 5,
-        m = 8, ks = 16, dim = 64))
-    // PageRank (g01) at blowup: per iteration one src-keyed join + one
-    // dst-keyed aggregation over a 2-out-link graph that scales with the
-    // corpus — cost must track edges × iterations linearly (no pair
-    // term, no densification). The nDocs count for edge synthesis stays
-    // outside the timed region (shouldRun is idempotent).
-    if (shouldRun("pagerank")) {
-      val nDocs = docs.count()
-      val verts = docs.select(col("doc_id"))
-      val edges = verts.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 13, lit(nDocs)).as("dst"))
-        .unionByName(verts.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 31 + 7, lit(nDocs)).as("dst")))
-      run("pagerank")(
-        graft.analytics.Graph.pageRank(edges, docs, iters = 5, idCol = "doc_id"))
 
-      // g09 on the same graph: per iteration ONE src-keyed join + ONE
-      // plain partial+final integer SUM keyed by dst — no ordered-fold
-      // collect_list buffers at all, so it must track edges×iterations
-      // with a SMALLER constant than pagerank's replayable fold.
-      run("ppr")(
-        graft.analytics.Graph.personalizedPageRank(edges, docs,
-          seeds = Seq(0L, 1L, 2L, 3L), iters = 5, idCol = "doc_id"))
-    }
-
-    // HITS (g02) at blowup: same graph, TWO joins + TWO aggregations per
-    // iteration (src- and dst-keyed) plus two 1-row L1-total folds — cost
-    // must track edges × iterations like pagerank, at roughly twice the
-    // per-iteration constant. The L1-total folds collect the VERTEX-count
-    // score vector into one row each — the price of bit-replayable
-    // normalization, honest here: it is corpus-sized, not model-sized,
-    // and the production swap is plain sum(+L2) as Graph.hits documents.
-    if (shouldRun("hits")) {
-      val nDocs = docs.count()
-      val verts = docs.select(col("doc_id"))
-      val edges = verts.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 13, lit(nDocs)).as("dst"))
-        .unionByName(verts.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 31 + 7, lit(nDocs)).as("dst")))
-      run("hits")(
-        graft.analytics.Graph.hits(edges, docs, iters = 3, idCol = "doc_id"))
-    }
-
-    // CDC chunking (d23) at blowup: the chunking itself is a per-row HOF
-    // chain (linear); the fp groupBy grows COUNTS with duplicate mass,
-    // never pairs — cost must track the corpus, not its square.
-    run("cdc_chunks")(
-      Dedup.cdcChunkDedup(docs, w = 4, divisor = 16))
-
-    // Triangle counting (g03) at blowup: the g03 edge families over the
-    // blown-up corpus — degree-ordered wedges bound the self-join, the
-    // closure is an equi-join on the canonical edge key; edges and
-    // triangles both scale linearly in mult, so cost must too (a pair
-    // term here would mean the orientation failed).
-    if (shouldRun("triangles")) {
-      val nDocs = docs.count()
-      val verts = docs.select(col("doc_id"))
-      val edges = verts.select(col("doc_id").as("src"),
-          pmod(col("doc_id") + 1, lit(nDocs)).as("dst"))
-        .unionByName(verts.select(col("doc_id").as("src"),
-          pmod(col("doc_id") + 2, lit(nDocs)).as("dst")))
-        .unionByName(verts.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 13, lit(nDocs)).as("dst")))
-      run("triangles")(graft.analytics.Graph.triangleCounts(edges))
-    }
-
-    // SQ ADC search (s10) at blowup, next to pq_topk: bounds aggregate +
-    // per-row encode are one corpus scan each, scoring is the broadcast-
-    // probe NLJ — cost must track the corpus scan, no pair term.
-    run("sq_topk")(
-      Similarity.sqTopK(vecs, vecs.where(col("vec_id") < 10), k = 5, dim = 64))
-
-    // Pareto skyline (q59) at blowup on a synthesized irregular point
-    // set: distinct + bucket-partitioned prefix max — linear in points,
-    // and the receipt that the no-global-window shape holds at size.
-    run("skyline")(
-      graft.analytics.Skyline.skyline2D(
-        spark.range(200000L * mult).select(
-          (pmod(col("id") * 37, lit(99991L))).cast("double").as("x"),
-          (pmod(col("id") * 59, lit(99989L))).cast("double").as("y")),
-        "x", "y"))
-
-    // KS drift (q60) at blowup on synthesized two-sided samples: the
-    // per-(group, value) count shuffle dominates; prefix sums are
-    // bucket-partitioned — cost must track rows, never group size.
-    run("ks_drift")(
-      graft.analytics.Drift.ksDrift(
-        spark.range(200000L * mult).select(
-          concat(lit("g"), pmod(col("id"), lit(5))).as("g"),
-          pmod(col("id") * 37, lit(9973L)).cast("double").as("v"),
-          (pmod(col("id"), lit(2)) + 1).cast("int").as("s")),
-        "g", "v", "s"))
-
-    // Blocked fuzzy ER (d24) at blowup: synthesized 9-digit entity names
-    // with one md5-positioned substitution; candidates come only from the
-    // two INTERLEAVED-digit equi-joins (contiguous halves measured 13×
-    // superlinear here — zero-padded ids keep all entropy in the low
-    // digits and the high-digit key became one giant block), then the
-    // levenshtein gate — cost must track records plus candidate count,
-    // never records².
-    run("entity_resolution") {
-      val n = 1500L * mult
-      val base = spark.range(n).select(col("id"),
-        format_string("Entity#%09d", col("id")).as("c_name"))
-      val p = conv(substring(md5(col("id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 9
-      val dirty = base.select(col("id").as("d_id"),
-        concat(col("c_name").substr(lit(1), lit(7L) + p), lit("X"),
-          col("c_name").substr(lit(9L) + p, lit(8L) - p)).as("d_name"))
-      val clean = base.select(col("id").as("c_id"), col("c_name"))
-      def pick(ps: Seq[Int]): org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        nm => concat(ps.map(q => nm.substr(lit(q), lit(1))): _*)
-      graft.analytics.EntityResolution.blockedFuzzyMatch(dirty, clean,
-        Seq(pick(Seq(8, 10, 12, 14, 16)), pick(Seq(9, 11, 13, 15))), maxDist = 1)
-    }
-
-    // aHash image near-dup (m06) at blowup: the per-row hash pipeline is
-    // linear; the id-shifted copies are EXACT body duplicates, so
-    // Hamming-0 pair mass grows quadratically in mult (the minhash_lsh
-    // regime) — candidate volume must track duplicate mass, never
-    // corpus² (bands, not all-pairs).
-    run("ahash_neardup")(
-      graft.analytics.Multimodal.aHashNearDups(docs, maxHamming = 6))
-
-    // A-priori pair mining (q61) at blowup on synthesized baskets
-    // (4 items each, overlapping item pattern): supports scale with
-    // mult, baskets scale with mult, pair counts scale with mult — cost
-    // must be linear (the support prune holds the fan-out constant).
-    run("copurchase")(
-      graft.analytics.Itemsets.frequentPairs(
-        spark.range(100000L * mult).select(
-          (col("id") / 4).cast("long").as("o"),
-          pmod(col("id") * 37, lit(997L)).as("p")),
-        "o", "p", minItemSupport = 50L * mult, minPairSupport = 10L * mult))
-
-    // Exact AUC (q62) at blowup: per-score counts + bucketed prefix —
-    // the count table is score-cardinality-sized (constant here), so
-    // cost must track the one counting scan.
-    run("auc")(
-      graft.analytics.Eval.aucROC(
-        spark.range(200000L * mult).select(
-          (pmod(col("id") * 37, lit(9973L)).cast("double") / 9973.0).as("score"),
-          (pmod(col("id"), lit(3)) === 0).as("label")),
-        "score", "label"))
-
-    // Cross-doc line removal (d25) at blowup: id-shifted copies make
-    // EVERY line cross-document-duplicated (worst case — everything is
-    // boilerplate at minDf ≤ mult), so this times the full pipeline at
-    // total drop rate; cost must track line rows (explode + DF agg +
-    // anti join + reassembly), never line pairs.
-    run("cross_doc_lines")(
-      graft.analytics.TextAnalysis.stripCrossDocLines(
-        docs.withColumn("mtext", concat_ws("\n",
-          col("text"), substring(col("text"), 1, 40))), "mtext", minDf = 3))
-
-    // Kneser–Ney scoring (t20) at blowup: one bigram explode, three
-    // count aggregations, model joins on vocabulary-sized keys — linear
-    // in corpus bigrams (duplicate docs just scale the counts).
-    run("kneser_ney")(
-      graft.analytics.TextAnalysis.kneserNeyBigramScores(docs))
-
-    // BM25 scoring (t22) at blowup: the inverted-index build is linear
-    // in tokens; the query-term join touches only postings of the 3
-    // fixed queries' terms — candidate rows scale with those postings
-    // (linear in mult), never with n_docs × n_queries.
-    run("bm25") {
-      val queries = docs.where(col("doc_id").isin(0L, 7L, 14L))
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", graft.analytics.TextAnalysis.tokens(col("text"))(0),
-            graft.analytics.TextAnalysis.tokens(col("text"))(1)).as("qtext"))
-      graft.analytics.TextAnalysis.bm25Scores(docs, queries)
-    }
-
-    // Production graph paths (replayable=false: plain partial-aggregated
-    // sums, no ordered folds) — paired with the `pagerank`/`hits`
-    // datapoints above, the delta IS the measured determinism tax.
-    if (shouldRun("pagerank_prod") || shouldRun("hits_prod")) {
-      val nDocs = docs.count()
-      val verts = docs.select(col("doc_id"))
-      val edges = verts.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 13, lit(nDocs)).as("dst"))
-        .unionByName(verts.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 31 + 7, lit(nDocs)).as("dst")))
-      run("pagerank_prod")(graft.analytics.Graph.pageRank(
-        edges, docs, iters = 5, idCol = "doc_id", replayable = false))
-      run("hits_prod")(graft.analytics.Graph.hits(
-        edges, docs, iters = 3, idCol = "doc_id", replayable = false))
-    }
-
-    // MMR diversified retrieval (s09) at blowup: the candidate pool is a
-    // broadcast-probe corpus scan (s01's shape), everything after runs on
-    // probes×kCand rows — cost must track the corpus scan term only; the
-    // greedy rounds are corpus-size-independent.
-    run("mmr")(
-      Similarity.mmrTopK(vecs, vecs.where(col("vec_id") < 10), kCand = 10,
-        kSelect = 3, lambda = 0.7))
-
-    // Adversarial CC topology at scale: ONE path component of 100k×mult
+    // Adversarial CC topology at scale: ONE path component of 25k×mult
     // nodes (diameter = n−1). Min-label propagation needs one round per
     // hop — structurally impossible here; the large-star/small-star
     // contraction must resolve it in O(log n) rounds, so this times the
@@ -457,312 +116,6 @@ object ScaleSmoke {
         .select(col("id").as("src"), (col("id") + 1L).as("dst"))
       Dedup.connectedComponentsContracted(chain, spark.range(n).toDF("id"))
     }
-
-    // Cross-modal retrieval (m07) at blowup: the image-side embed is a
-    // per-row projection (dim × tokens md5 folds), probes fixed — cost
-    // must track the image scan linearly; the top-1 join is
-    // probes × images over dim-int vectors, dominated by the embed.
-    run("crossmodal")(
-      graft.analytics.Multimodal.crossModalTop1(docs, dim = 32,
-        captionTokens = 16, maxProbeId = 30L))
-
-    // d27/d28's df-cap at blowup, BOTH sides timed: the capped chain's
-    // postings exclude ubiquitous terms, so candidate rows track real
-    // near-dup mass; the uncapped chain's common-term postings make the
-    // probe join quasi-all-pairs — the gap at mult IS the 100 TB
-    // justification for the declared cap, as a recorded number. The
-    // uncapped op only runs when explicitly selected (guard the full
-    // sweep from its blowup).
-    def tfidfPairs(capped: Boolean): DataFrame = {
-      val tf = docs
-        .select(col("doc_id"),
-          explode(graft.analytics.TextAnalysis.tokens(col("text"))).as("term"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-      val dfAll = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val dfSel = {
-        val d0 = dfAll.crossJoin(broadcast(nDocs))
-        (if (capped) d0.where(col("df") * 5 <= col("n_docs") * 2) else d0)
-          .select(col("term"), col("df"))
-      }
-      val w = tf.join(dfSel, Seq("term")).crossJoin(broadcast(nDocs))
-        .select(col("doc_id"), col("term"),
-          round(col("tf").cast("double") *
-            (log((lit(1.0) + col("n_docs").cast("double")) /
-              (lit(1.0) + col("df").cast("double"))) + 1.0), 9).as("w"))
-      w.where(col("doc_id") < 10)
-        .select(col("doc_id").as("a_id"), col("term"), col("w").as("wa"))
-        .join(w.select(col("doc_id").as("b_id"), col("term"), col("w").as("wb")),
-          Seq("term"))
-        .where(col("a_id") < col("b_id"))
-        .groupBy(col("a_id"), col("b_id"))
-        .agg(sum(col("wa") * col("wb")).as("dot"))
-    }
-    run("tfidf_capped")(tfidfPairs(capped = true))
-    if (opFilter("tfidf_uncapped"))
-      run("tfidf_uncapped")(tfidfPairs(capped = false))
-    else declaredOps += "tfidf_uncapped"
-
-    // k-core (g05) at blowup: each peel round is two alive-semijoins +
-    // one degree count over the persisted canonical edge list; the graph
-    // (ring+chord+hub-mesh) scales with the doc count and the peel depth
-    // is shape-bound (2 effective rounds at every n) — total cost must
-    // track edges near-linearly.
-    run("kcore") {
-      val n = docs.count()
-      val m = n / 10
-      val ids = docs.select(col("doc_id"))
-      val ring = ids.select(col("doc_id").as("src"),
-        pmod(col("doc_id") + 1, lit(n)).as("dst"))
-      val chord = ids.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 7 + 13, lit(n)).as("dst"))
-      val mesh = (1 to 3).map(j => ids.where(col("doc_id") < m)
-        .select(col("doc_id").as("src"), pmod(col("doc_id") + j, lit(m)).as("dst")))
-      graft.analytics.Graph.kCore(
-        (Seq(ring, chord) ++ mesh).reduce(_.unionByName(_)), k = 5, maxRounds = 8)
-    }
-
-    // Sketch rollup (q79) vs the exact rescan it replaces, at blowup:
-    // the sketch path sketches each day ONCE (one linear scan) and then
-    // merges day×day/2 kilobyte sketches — corpus-size-independent
-    // merge cost; the exact path re-joins every raw row into every
-    // later day, a ~days/2× row fan-out that grows with the corpus.
-    // The recorded gap IS the mergeable-sketch argument as a number.
-    val events0 = spark.read.parquet(s"$sfDir/events.parquet")
-    lazy val eventsBlown = {
-      val evShift = events0.agg(max(col("event_id"))).head.getLong(0) + 1L
-      (0 until mult).map(i =>
-        events0.withColumn("event_id", col("event_id") + lit(i * evShift)))
-        .reduce(_ union _)
-    }
-    def hllRollup(sketch: Boolean): DataFrame = {
-      val ev = eventsBlown
-      val us = EventTime.epochMicros(ev)
-      val ed = ev.select(
-        ((us - pmod(us, lit(86400000000L))) / lit(86400000000L)).cast("long").as("day"),
-        col("event_id"))
-      if (sketch) {
-        val daily = ed.groupBy(col("day"))
-          .agg(hll_sketch_agg(col("event_id"), lit(14)).as("sk"))
-        daily.select(col("day").as("d"), col("sk"))
-          .join(daily.select(col("day")), col("d") <= col("day"))
-          .groupBy(col("day"))
-          .agg(hll_sketch_estimate(
-            hll_union_agg(col("sk"), allowDifferentLgConfigK = false)).as("est"))
-      } else
-        ed.select(col("day").as("d"), col("event_id"))
-          .join(ed.select(col("day")).distinct(), col("d") <= col("day"))
-          .groupBy(col("day"))
-          .agg(count_distinct(col("event_id")).as("exact_n"))
-    }
-    run("hll_rollup_sketch")(hllRollup(sketch = true))
-    run("hll_rollup_exact")(hllRollup(sketch = false))
-
-    // Last-touch attribution (q82) at blowup: the as-of lookup is ONE
-    // user-keyed union+window — O(|L|+|R|) rows, no range-join blowup —
-    // so cost must track event rows linearly whatever the touch:conv
-    // ratio. Blown up by user-id shift (more users, same per-user
-    // history — the 100 TB axis).
-    run("attribution") {
-      val ev = eventsBlown
-      val us = EventTime.epochMicros(ev)
-      val shift = 1000000L
-      val ee = ev
-        .select(col("user_id"), us.as("tsu"), col("event_type"),
-          col("event_id"), col("value"))
-        .withColumn("user_id", col("user_id") + pmod(col("event_id"), lit(mult.toLong)) * shift)
-      val conv = ee.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("tsu"), col("event_id"), col("value"))
-      val touches = ee.where(col("event_type").isin("click", "view"))
-        .groupBy(col("user_id"), col("tsu"))
-        .agg(max(struct(col("event_id"), col("event_type"))).as("m"))
-        .select(col("user_id"), col("tsu"),
-          col("m").getField("event_type").as("ch"), col("tsu").as("tts"))
-      val j = graft.operators.AsOfJoin.leftAsOf(conv, touches, Seq("user_id"), "tsu", "t_")
-      j.select(when(col("t_tts").isNotNull &&
-            col("tsu") - col("t_tts") <= lit(259200000000L), col("t_ch"))
-          .otherwise(lit("organic")).as("channel"), col("value"))
-        .groupBy(col("channel")).agg(count(lit(1)).as("n_conv"))
-    }
-
-    // Contamination score (t26) at blowup: candidate bigram counts are
-    // one (doc, gram) shuffle tracking the corpus; the clip table stays
-    // pinned to the 20 ORIGINAL benchmark docs and broadcasts — cost
-    // must stay linear in docs and immune to the benchmark side.
-    run("ngram_overlap")(
-      graft.analytics.TextAnalysis.ngramContamination(docs,
-        docs.where(col("doc_id") < 20), threshold = 0.5))
-
-    // Count-min sketch (q74) at blowup: the counter matrix is d·w cells
-    // REGARDLESS of corpus size — cost must track the d× fan-out scan
-    // (linear in rows), and the probe join touches a constant-size
-    // matrix. The sketch is the one frequency structure whose state
-    // cannot grow with the key space.
-    run("count_min") {
-      val (d, w) = (4, 4096)
-      val toks = docs.select(col("doc_id"),
-        explode(graft.analytics.TextAnalysis.tokens(col("text"))).as("k"))
-      def bucket(r: org.apache.spark.sql.Column, k: org.apache.spark.sql.Column) =
-        pmod(conv(substring(md5(concat(r.cast("string"), lit(":"), k)), 1, 8),
-          16, 10).cast("long"), lit(w.toLong))
-      val cms = toks
-        .select(col("k"), explode(sequence(lit(0), lit(d - 1))).as("r"))
-        .groupBy(col("r"), bucket(col("r"), col("k")).as("b"))
-        .agg(count(lit(1)).as("c"))
-      val probes = toks.where(col("doc_id") < 5).select(col("k")).distinct()
-      probes
-        .select(col("k"), explode(sequence(lit(0), lit(d - 1))).as("r"))
-        .select(col("k"), col("r"), bucket(col("r"), col("k")).as("b"))
-        .join(cms, Seq("r", "b"))
-        .groupBy(col("k")).agg(min(col("c")).as("est_n"))
-    }
-
-    // d31: winnowed fingerprint selection is per-row HOF work — must be
-    // ~linear in corpus size regardless of duplicate mass (no pair term
-    // exists until the downstream capped index, which d04's receipt
-    // already covers)
-    run("winnowing")(Dedup.winnowedFingerprints(docs, k = 5, w = 4))
-
-    // d32: exact Jaccard ≥ ½ self-join. The id-shifted blowup is
-    // ADVERSARIAL-QUADRATIC for this op by definition: every doc gains
-    // mult−1 exact copies, and each copy pair IS an output row (J = 1),
-    // so the ANSWER grows ~mult² — cost must track output size, while
-    // candidate evaluation stays flat (identical texts collapse to the
-    // same bitmask, so the distinct-mask count M — and the M²/2 pair
-    // evaluations — are INVARIANT under the blowup; that invariance is
-    // the 100 TB claim). Run this op against sf0.01 (500 base docs):
-    // at sf0.1 ×20 the output alone is ~3.5B rows.
-    run("jaccard_join")(Dedup.jaccardSelfJoin(docs))
-
-    // d34: maximal exact repeats. The id-shifted blowup is adversarial
-    // like d32's: every doc gains mult−1 exact copies, each fingerprint's
-    // occurrence list grows ×mult — but the ADJACENT-occurrence pairing
-    // keeps the pair term LINEAR in occurrences (×mult, never ×mult²),
-    // and each pair's extension is per-row HOF work. Expected: wall
-    // tracks occurrence count (~mult), not pair space. Run against
-    // sf0.01.
-    run("exact_repeats")(Dedup.maximalExactRepeats(docs, k = 5, w = 4,
-      minLen = 8))
-
-    // d33: edit-distance self-join. The id shift changes each copy's
-    // doc_id-derived mutation, so copies become ed-neighbors rather
-    // than exact dupes: DISTINCT strings grow ~mult (the HARDER case —
-    // no identical-string collapse to hide behind), the prefix index
-    // grows with them, and output grows as mutation families collide.
-    // Run against sf0.01.
-    run("edit_distance_join") {
-      val strs = docs
-        .withColumn("b", expr("substr(lower(text), 1, 24)"))
-        .withColumn("str", expr(
-          """CASE WHEN doc_id % 3 = 0 THEN
-            |  substr(b, 1, CAST(doc_id % 10 AS INT) + 3) ||
-            |  substr(b, CAST(doc_id % 10 AS INT) + 5)
-            |WHEN doc_id % 3 = 1 THEN
-            |  substr(b, 1, CAST(doc_id % 10 AS INT) + 3) || 'z' ||
-            |  substr(b, CAST(doc_id % 10 AS INT) + 5)
-            |ELSE b END""".stripMargin))
-      graft.analytics.EntityResolution.editDistancePairs(
-        strs, "doc_id", "str", k = 2, q = 4)
-    }
-
-    // s13: all-corpus kNN graph at the cluster-trade LSH config. Bucket
-    // sizes grow ×mult, so per-bucket candidate pairs grow ×mult² — the
-    // documented pair-op cost model; the receipt records how the
-    // all-corpus probe side amplifies it.
-    run("knn_graph")(
-      Similarity.lshTopK(vecs, vecs, k = 3, nTables = 8, planesPerTable = 8,
-        dim = 64))
-
-    // g06: seed-distance BFS — driver-coordinated rounds over a
-    // bucketed edge join; rounds are bounded by maxRounds, per-round
-    // cost by |frontier ⋈ edges|. Same synthetic two-out-degree graph
-    // as the catalog entry, over the blown-up id space.
-    run("seed_bfs") {
-      val n = docs.count()
-      val edges = docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 13, lit(n)).as("dst"))
-        .unionByName(docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 31 + 7, lit(n)).as("dst")))
-      graft.analytics.Graph.seedDistances(edges,
-        docs.where(col("doc_id") < 5), maxRounds = 16, idCol = "doc_id")
-    }
-
-    // q86: the 4-pair melt fan-out (explode → 4× rows → one partial+final
-    // aggregate). Linear with a 4× constant — the receipt pins that the
-    // Expand-style fan-out stays map-side and never shuffles pre-melt rows.
-    run("corr_matrix") {
-      val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .select(col("l_quantity").cast("double").as("q"),
-          col("l_extendedprice").cast("double").as("ep"),
-          col("l_discount").cast("double").as("d"),
-          col("l_tax").cast("double").as("tx"))
-      val li = (0 until mult).map(_ => li0).reduce(_ unionAll _)
-      li.select(explode(array(
-          struct(lit("discount_tax").as("pair"), col("d").as("x"), col("tx").as("y")),
-          struct(lit("extprice_tax").as("pair"), col("ep").as("x"), col("tx").as("y")),
-          struct(lit("quantity_discount").as("pair"), col("q").as("x"), col("d").as("y")),
-          struct(lit("quantity_extprice").as("pair"), col("q").as("x"), col("ep").as("y"))))
-          .as("e"))
-        .select(col("e.pair").as("pair"), col("e.x").as("x"), col("e.y").as("y"))
-        .groupBy(col("pair"))
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          sum(col("x") * col("y")).as("sxy"),
-          sum(col("x") * col("x")).as("sx2"), sum(col("y") * col("y")).as("sy2"))
-    }
-
-    // q90: sweep-line max concurrency — ±1 deltas, one (type, ts)
-    // aggregate, then the bucketed prefix-sum machinery (Prefix.scala)
-    // whose whole point is surviving blowup WITHOUT a partition-wide
-    // ordered window; the receipt is the proof it does.
-    run("max_concurrency") {
-      val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
-      val evShift = ev0.agg(max(col("event_id"))).head.getLong(0) + 1L
-      val ev = (0 until mult).map(i =>
-        ev0.withColumn("event_id", col("event_id") + lit(i * evShift))).reduce(_ union _)
-      val us = EventTime.epochMicros(ev)
-      val iv = ev.select(col("event_type"), us.as("st"),
-        (us + (pmod(col("event_id"), lit(240L)) + 1L) * 60000000L).as("en"))
-      val deltas = iv.select(col("event_type"), col("st").as("tsu"), lit(1L).as("d"))
-        .unionByName(iv.select(col("event_type"), col("en").as("tsu"), lit(-1L).as("d")))
-      val net = deltas.groupBy(col("event_type"), col("tsu"))
-        .agg(sum(col("d")).as("net"))
-      val cum = graft.analytics.Prefix.bucketedPrefixSums(net,
-        Seq("event_type"), "tsu", Seq("net"))
-      cum.groupBy(col("event_type")).agg(max(col("net_cum")).as("max_concurrent"))
-    }
-
-    // g07: synchronous label propagation — rounds × (edge join + vote
-    // count + per-vertex window), all keyed shuffles. The id-shifted
-    // blowup multiplies BLOCKS, not block size, so cost must track |E|
-    // linearly; no pair term exists.
-    run("label_prop") {
-      val n = docs.count()
-      val base = col("doc_id") - pmod(col("doc_id"), lit(8L))
-      val edges = docs.select(col("doc_id").as("src"),
-          (base + pmod(col("doc_id") + 1, lit(8L))).as("dst"))
-        .unionByName(docs.select(col("doc_id").as("src"),
-          (base + pmod(col("doc_id") + 2, lit(8L))).as("dst")))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(32L)) === 0)
-          .select(col("doc_id").as("src"),
-            pmod(col("doc_id") + 8, lit(n)).as("dst")))
-      graft.analytics.Graph.labelPropagation(edges, docs, rounds = 4,
-        idCol = "doc_id")
-    }
-
-    // s20: binary sign ANN — one 63-plane projection per row builds an
-    // 8-byte mask; the candidate scan is one xor+popcount per
-    // (probe, corpus) pair with a pinned probe side — linear, and the
-    // cheapest per-pair scorer in the family.
-    run("binary_topk")(
-      Similarity.binaryTopK(vecs, vecs0.where(col("vec_id") < 10), k = 5,
-        nCand = 100, dim = 64))
-
-    // s14: random-projection ANN — the projection is one per-row linear
-    // pass and the probe side is pinned (10 probes), so cost must track
-    // corpus rows ~linearly; no pair term exists anywhere in the plan.
-    run("rp_topk")(
-      Similarity.rpTopK(vecs, vecs0.where(col("vec_id") < 10), k = 5,
-        rDim = 32, nCand = 100, dim = 64))
 
     // B2's skew story, measured: the blown-up docs are joined to a
     // 64-row dimension on an ADVERSARIALLY hot key (90% of fact rows
@@ -790,229 +143,6 @@ object ScaleSmoke {
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("s")))
     }
-
-    // s15: hard-negative mining — exact scan over the label complement
-    // with a pinned probe side; linear in corpus rows like s01/s14.
-    run("hard_negatives")(
-      Similarity.hardNegatives(vecs, vecs0.where(col("vec_id") < 10), k = 5))
-
-    // s16 at FIXED nCells: the id-shifted blowup multiplies every cell's
-    // population by mult (copies land in their original's cell), so the
-    // Σ|cell|² pair term grows ×mult² — the documented cost model, same
-    // adversarial case as jaccard_join.
-    run("semdedup_fixed_cells") {
-      val cents = vecs0.orderBy(col("vec_id")).limit(16)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("cent_vec"))
-      Similarity.semDeDup(vecs, cents, tau = 0.3)
-    }
-
-    // s16 at SCALED nCells (16·mult — the paper's production rule:
-    // nCells grows with the corpus, holding per-cell population flat).
-    // The pair term collapses back toward ×mult; the fixed/scaled gap IS
-    // the 100 TB argument for this operator.
-    run("semdedup_scaled_cells") {
-      val cents = vecs.orderBy(col("vec_id")).limit(16 * mult)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("cent_vec"))
-      Similarity.semDeDup(vecs, cents, tau = 0.3)
-    }
-
-    // s17: prototype pruning — one broadcast assignment + one cent_id
-    // shuffle with a per-cell window; linear, no pair term. (The window
-    // partitions grow with blowup at fixed nCells; scaled nCells keeps
-    // them bounded, same knob as s16.)
-    run("prototype_prune") {
-      val cents = vecs0.orderBy(col("vec_id")).limit(16)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("cent_vec"))
-      Similarity.prototypePrune(vecs, cents, keepNum = 3, keepDenom = 5)
-    }
-
-    // q93/q97: CUPED readout and the SMD balance gate — per-user
-    // conditional decimal sums (one user-keyed shuffle), then constant
-    // -state moment algebra. Cost must track event rows linearly.
-    run("cuped") {
-      val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
-      val evShift = ev0.agg(max(col("event_id"))).head.getLong(0) + 1L
-      val ev = (0 until mult).map(i =>
-        ev0.withColumn("event_id", col("event_id") + lit(i * evShift))
-          .withColumn("user_id", col("user_id") + lit(i * 1000000L)))
-        .reduce(_ union _)
-      val us = EventTime.epochMicros(ev)
-      val e2 = ev.select(col("user_id"), us.as("tsu"), col("value"))
-      val mid = org.apache.spark.sql.functions.broadcast(
-        e2.agg(expr("(min(tsu) + max(tsu)) div 2").as("mid")))
-      val z = lit(0).cast("decimal(18,2)")
-      val units = e2.crossJoin(mid)
-        .groupBy(col("user_id"))
-        .agg(
-          sum(when(col("tsu") <= col("mid"),
-            col("value").cast("decimal(18,2)")).otherwise(z))
-            .cast("decimal(18,2)").as("x"),
-          sum(when(col("tsu") > col("mid"),
-            col("value").cast("decimal(18,2)")).otherwise(z))
-            .cast("decimal(18,2)").as("y"))
-        .withColumn("variant", pmod(col("user_id"), lit(2L)))
-      graft.analytics.Eval.cuped(units, "variant", "x", "y")
-    }
-
-    // t30: fertility — BPE training cost is FLAT under the id-shift
-    // blowup (the word-frequency table is identical — same words, mult×
-    // counts), and encode + the per-language sums are linear. The
-    // receipt pins that the trainer never scales with corpus copies.
-    run("fertility") {
-      val (_, vocab) = graft.analytics.Bpe.train(docs, nMerges = 12)
-      val enc = graft.analytics.Bpe.encode(docs, vocab)
-        .select(col("doc_id"), col("n_bpe"))
-      docs.select(col("doc_id"), col("lang"),
-          size(graft.analytics.TextAnalysis.tokens(col("text")))
-            .cast("long").as("n_words"),
-          octet_length(col("text")).cast("long").as("n_bytes"))
-        .join(enc, Seq("doc_id"), "left")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_words")).as("n_words"),
-          sum(coalesce(col("n_bpe"), lit(0L))).as("n_bpe"),
-          sum(col("n_bytes")).as("n_bytes"))
-    }
-
-    // t31: retrieval eval — posting lists grow ×mult but the query side
-    // is pinned (3 queries), so the BM25 candidate join and the metric
-    // folds must track corpus rows ~linearly.
-    run("retrieval_eval") {
-      val queries = docs.where(col("doc_id").isin(0L, 7L, 14L))
-        .select(col("doc_id").as("query_id"),
-          array_join(slice(graft.analytics.TextAnalysis.tokens(col("text")),
-            1, 4), " ").as("qtext"))
-      graft.analytics.TextAnalysis.retrievalMetrics(docs, queries, kEval = 10)
-    }
-
-    // q96: Poisson bootstrap — ONE scan with a reps-way map-side
-    // fan-out into a reps-row aggregate; cost must track rows × reps
-    // linearly, state is reps rows whatever the corpus.
-    run("bootstrap") {
-      val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
-      val evShift = ev0.agg(max(col("event_id"))).head.getLong(0) + 1L
-      val ev = (0 until mult).map(i =>
-        ev0.withColumn("event_id", col("event_id") + lit(i * evShift)))
-        .reduce(_ union _)
-      graft.analytics.Eval.poissonBootstrap(ev, "event_id", "value", reps = 40)
-    }
-
-    // g08: feature propagation — one edge join + one grouped fold per
-    // hop; linear in |E|, no pair term (the g07 shape with a double
-    // payload instead of a label vote).
-    run("feature_prop") {
-      val n = docs.count()
-      val edges = docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 13, lit(n)).as("dst"))
-        .unionByName(docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 31 + 7, lit(n)).as("dst")))
-      val q = docs.select(col("doc_id"),
-        graft.analytics.TextAnalysis.qualityScore(col("text")).as("quality"))
-      graft.analytics.Graph.featurePropagation(edges, q, hops = 2,
-        idCol = "doc_id", featCol = "quality")
-    }
-
-    // q95: KMV overlap — each sketch is a top-k-by-hash
-    // (TakeOrderedAndProject: partial per partition, k rows merged),
-    // the estimator touches only k-row frames. Cost must track the
-    // hashing scan linearly; sketch size is k whatever the corpus.
-    run("kmv_overlap") {
-      def elems(m: Long) = docs.where(pmod(col("doc_id"), lit(m)) =!= 0)
-        .select(md5(col("text")).as("h"))
-      graft.analytics.Sketches.kmvOverlap(elems(3), elems(2), "h", k = 64)
-    }
-
-    // s19: IVF-PQ residual index — encode is linear (one assignment +
-    // one codes pass over the corpus); the probe side is pinned, and
-    // candidate volume is corpus·nProbe/nCells. The blowup grows cells'
-    // POPULATIONS at fixed nCells, so probe-side candidates grow ~mult
-    // (scaled nCells keeps them flat — s16's knob, same argument).
-    run("ivfpq")(
-      Similarity.ivfPqTopK(vecs, vecs0.where(col("vec_id") < 10), k = 5,
-        nCells = 16, nProbe = 4, m = 8, ks = 16, dim = 64))
-
-    // s18: matryoshka recall — one corpus scan per truncation dim with a
-    // pinned probe side; linear × |dims|, no pair term.
-    run("matryoshka")(
-      Similarity.matryoshkaRecall(vecs, vecs0.where(col("vec_id") < 10),
-        k = 5, dims = Seq(8, 16, 32, 64)))
-
-    // q94: merkle manifest — three DATA-ordered hash folds under the
-    // blocked discipline (≤ blockSize row hashes per reduce). Cost must
-    // track rows linearly; the blowup multiplies blocks, never the
-    // per-reduce string size.
-    run("merkle_manifest")(
-      graft.analytics.Sampling.merkleManifest(docs, nShards = 8,
-        blockSize = 4096, idCol = "doc_id", payloadCol = "text"))
-
-    // t29: DSIR importance weights — ONE (token)-keyed shuffle builds
-    // both unigram models; the per-doc weight sum is a second linear
-    // pass. Cost must track token volume ~linearly; the vocabulary (and
-    // the broadcastable weight table) grows sublinearly (Heaps' law).
-    run("dsir")(
-      graft.analytics.TextAnalysis.dsirSelect(docs,
-        targetPred = col("lang") === "en", keepNum = 1, keepDenom = 5))
-
-    // t33: n-gram novelty — gram-keyed partial+final aggregates, then a
-    // doc-sized join; cost must track gram volume ~linearly. The blown-up
-    // corpus is adversarial in the USEFUL direction: every copy's grams
-    // already exist in copy 0, so the (gram, first_id) table stays
-    // constant-sized while the exploded input grows mult× — wall should
-    // track the input term, never duplicate mass.
-    run("novelty")(
-      graft.analytics.TextAnalysis.noveltyScores(docs, n = 3))
-
-    // m11: shot-boundary detection — map-only fan-out (8 frames/video) +
-    // a per-doc lag window (bounded partitions); strictly linear.
-    run("shot_boundaries")(
-      graft.analytics.Multimodal.shotBoundaries(docs, frames = 8,
-        window = 64, threshold = 14))
-
-    // s23: k-center greedy — k-1 driver-coordinated rounds, each ONE
-    // partial+final min_by pass over the persisted corpus projection;
-    // cost is k × linear scan, independent of duplicate mass (the
-    // selected set is k rows of driver state).
-    run("kcenter")(Similarity.kCenterGreedy(vecs, k = 8))
-
-    // s24: semantic chunking — map-only projection + two per-doc windows
-    // on ONE bounded (8-row) partitioning; strictly linear in vectors.
-    run("semantic_chunks")(
-      Similarity.semanticChunks(vecs, tokensPerDoc = 8, minCos = -0.1))
-
-    // q99: shard rebalance — a pure per-row HOF ring lookup over a
-    // 144/160-element literal array + one aggregate; strictly linear.
-    run("rebalance")(
-      graft.analytics.Sampling.shardRebalance(docs.select(col("doc_id")),
-        n = 8, vnodes = 16))
-
-    // s25: IVF sweep — fixed 10 probes; the corpus assignment is the
-    // linear term and candidate volume is corpus × maxProbe / nCells, so
-    // the whole curve must track the corpus, never a pair space.
-    run("ivf_sweep")(
-      Similarity.ivfRecallSweep(vecs, vecs.where(col("vec_id") < 10), k = 5,
-        nCells = 16, probeCounts = Seq(1, 2, 4, 8, 16)))
-
-    // g10: harmonic centrality — g06's BFS loop with per-(vertex, seed)
-    // state (5× the distance rows) and an exact-integer term sum; cost
-    // must track edges × diameter like the seed BFS.
-    if (shouldRun("harmonic")) {
-      val nDocs = docs.count()
-      val verts = docs.select(col("doc_id"))
-      val edges = verts.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 13, lit(nDocs)).as("dst"))
-        .unionByName(verts.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 31 + 7, lit(nDocs)).as("dst")))
-      run("harmonic")(
-        graft.analytics.Graph.harmonicCentrality(edges,
-          verts.where(col("doc_id") < 5), maxRounds = 16, idCol = "doc_id"))
-    }
-
-    // t34: greedy rollout — ONE corpus bigram pass builds the transition
-    // table; the 12-step walk is nSeeds-row control data. Cost must
-    // track the corpus pass; the blowup adds zero NEW transitions (every
-    // copy's bigrams exist in copy 0), so the argmax table is constant.
-    run("generate")(
-      graft.analytics.TextAnalysis.greedyBigramRollout(docs,
-        nSeeds = 3, steps = 12))
 
     // Driver-memory budget receipts (r16 verdict task 6): the driver-
     // coordinated ops hold only CONTROL-sized state, enforced by measured

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * `SparkEntry.queries` entry on ×1/×4/×16 synthesized corpora and emit
   * per-query (seconds, shuffle-bytes) with fitted exponents, flagging
   * anything super-linear in shuffle bytes — the "would it survive 100×"
-  * measurement the fixed-sf bench cannot give. ScaleSmoke keeps the
-  * deep-dive receipts for the risky families; this is the blanket gate.
+  * measurement the fixed-sf bench cannot give. This is the general
+  * scaling gate; ScaleSmoke keeps only the adversarial probes this sweep
+  * cannot express.
   *
   * Corpus synthesis (from sf0.001 by default, so ×16 ≈ sf0.016): each copy
   * i is a PARALLEL UNIVERSE of the base —
@@ -18,8 +19,8 @@ import org.apache.spark.sql.functions._
   *  - documents get per-copy token salting (every space becomes ` s{i}x `):
   *    copies share NO shingles, so duplicate/near-dup mass grows ×N like a
   *    real corpus — an unsalted id-shift union would manufacture ×N² pair
-  *    mass (that ADVERSARIAL shape is ScaleSmoke's deliberate probe, not a
-  *    scaling measurement);
+  *    mass (that ADVERSARIAL shape is ScaleSmoke's deliberate probe for
+  *    the dedup and cluster paths, not a scaling measurement);
   *  - embeddings get per-copy hash-derived element noise (copies are
   *    distinct vectors, not ×N-deep LSH bucket pileups). Copy 0 is salted/
   *    perturbed too, so every multiplier draws from one distribution.

@@ -32,11 +32,8 @@ import graft.functions.NetFunctions
   */
 object SparkEntry {
 
-  /** Forwarders into [[QueryHelpers]] for callers outside the catalog
-    * files (ScaleSmoke, specs). */
-  private[graft] def qualityQuota(docs: DataFrame, k: Int): DataFrame =
-    QueryHelpers.qualityQuota(docs, k)
-
+  /** Forwarders into [[QueryHelpers]] (OperatorsSpec; d19 in
+    * QueriesDedup). */
   private[graft] def tokenBudgetSelect(docs: DataFrame, budgetPerLang: Long): DataFrame =
     QueryHelpers.tokenBudgetSelect(docs, budgetPerLang)
 

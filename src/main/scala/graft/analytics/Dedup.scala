@@ -1149,8 +1149,7 @@ object Dedup {
     * the corpus is never re-read per batch (the d17 fingerprint-index
     * story, one level deeper). Batch size drives the incremental cost:
     * one batch explode, one window over batch grams, one keyed join
-    * against the index ([[graft.ScaleSmoke]] measures the
-    * batch-cost-vs-corpus-blowup invariant).
+    * against the index (d20 in [[graft.ScaleSweep]] tracks its scaling).
     */
   def incrementalSpanCoverage(corpus: DataFrame, batch: DataFrame, n: Int,
       idCol: String = "doc_id", textCol: String = "text",
@@ -1508,7 +1507,7 @@ object Dedup {
     // BOUNDED probe picks the expansion regime (documented at the regime
     // split below): limit(max+1) never scans past the threshold — the
     // d32 vocabulary-probe discipline, not a full count of a corpus
-    // that may be derived (ScaleSmoke's 20-way union) rather than a scan
+    // that may be derived (an N-way union) rather than a scan
     val probeCap = math.min(smallCorpusMax, Int.MaxValue - 1L).toInt
     val nDocs =
       if (smallCorpusMax <= 0L) 1L // forced scale regime: skip the probe

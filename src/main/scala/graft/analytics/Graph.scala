@@ -71,7 +71,8 @@ object Graph {
           round(col("pr") / col("deg"), 15).as("c"))
       // replayable=false is the documented production swap: a plain
       // partial-aggregated sum — map-side combine, no per-key buffers,
-      // no bit-replayability (ScaleSmoke records the delta)
+      // no bit-replayability (GraphSpec pins its agreement with the
+      // replayable fold)
       val sums =
         if (replayable && foldBlock > 0L)
           // viral-key cap: two-level fold keyed by src VALUE blocks —
@@ -261,8 +262,8 @@ object Graph {
     // foldBlock > 0 caps per-key buffers via the two-level VALUE-keyed
     // block fold (see pageRank — the viral-key guard, deterministic
     // under any partitioning); replayable=false swaps in the plain
-    // partial-aggregated sum (the production path — ScaleSmoke records
-    // the determinism tax)
+    // partial-aggregated sum (the production path, without the
+    // determinism tax)
     def orderedSum(df: DataFrame, key: String, sortKey: String): DataFrame =
       if (replayable && foldBlock > 0L) df
         .groupBy(col(key),

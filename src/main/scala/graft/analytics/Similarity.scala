@@ -316,7 +316,7 @@ object Similarity {
     * point lookup against the bucketed/z-ordered embedding table; in Spark
     * the equivalent column-pruned scan + broadcast semi-filter). Driver
     * state per round is the probes×beam scored set — frontier-bound, never
-    * corpus-bound (ScaleSmoke receipts wall tracking corpus LINEARLY, the
+    * corpus-bound (ScaleSmoke measured wall tracking corpus LINEARLY, the
     * per-round scans, not candidate fan-out). The scored set is eagerly
     * checkpointed per round, so the graph cache can be released before the
     * result is consumed.
@@ -328,9 +328,9 @@ object Similarity {
     * cost model, measured ×27 wall for ×4 corpus at 8 planes). The
     * production sizing bounds occupancy by scaling planes with corpus:
     * planesPerTable ≈ log₂(n / targetOccupancy), which keeps per-bucket
-    * pairs — and so the whole build — linear in n (ScaleSmoke's
-    * beam_graph_build receipt uses exactly that sizing). The build runs
-    * ONCE per index generation; queries pay only the walk, so the two are
+    * pairs — and so the whole build — linear in n (measured linear in
+    * ScaleSmoke's id-shifted blowup under exactly that sizing). The build
+    * runs ONCE per index generation; queries pay only the walk, so the two are
     * separate entry points: [[beamSearchOnGraph]] walks a prebuilt edge
     * list, and this convenience overload builds-then-walks.
     */
@@ -501,9 +501,8 @@ object Similarity {
   }
 
   /** The query-time half of [[hierarchicalBeamTopK]] on a PREBUILT base
-    * kNN edge list (the s21 beamSearchOnGraph split, one level up) —
-    * ScaleSmoke times this against the flat walk on the SAME prebuilt
-    * graph so the entry layer's cost is its own receipt.
+    * kNN edge list (the s21 beamSearchOnGraph split, one level up), so
+    * the entry layer's cost can be timed apart from the graph build.
     */
   def hierarchicalBeamOnGraph(corpus: DataFrame, probes: DataFrame,
       edges0: DataFrame, k: Int, beamWidth: Int, rounds: Int,

@@ -28,7 +28,10 @@ object Stream {
     * `sendBatch` receives the per-micro-batch Kafka-shaped frame
     * (key = notifId, value = JSON array) — in production a Kafka writer,
     * in tests a memory collector. The empty-batch short-circuit (C7,
-    * receiver.py:391–392) is the `isEmpty` guard.
+    * receiver.py:391–392) needs no guard: when no record survives,
+    * `kafkaBatches` emits no row, so `sendBatch` gets an empty frame and
+    * sends no message. A per-batch emptiness check would cost one more
+    * Spark job per micro-batch, re-reading the source.
     */
   def runIngest(
       raw: DataFrame,
@@ -43,11 +46,9 @@ object Stream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val notifs = Ingest.parseNotifications(batch, jsonCol)
-          val clock = now.getOrElse(unix_timestamp(current_timestamp()))
-          sendBatch(Ingest.kafkaMessages(notifs, subscriptions, rules, clock), batchId)
-        }
+        val notifs = Ingest.parseNotifications(batch, jsonCol)
+        val clock = now.getOrElse(unix_timestamp(current_timestamp()))
+        sendBatch(Ingest.kafkaMessages(notifs, subscriptions, rules, clock), batchId)
       }
       .start()
 
@@ -926,31 +927,15 @@ object Stream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val env = Ingest.envelopes(
-            Ingest.parseNotifications(batch, jsonCol), subscriptions, rules,
-            now.getOrElse(unix_timestamp(current_timestamp())))
-          graft.sinks.Sinks.websocketMessages(env)
-            .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-              it.foreach(r =>
-                hub.push(r.getAs[String]("key"), r.getAs[String]("value")))
-            }
-        }
+        val env = Ingest.envelopes(
+          Ingest.parseNotifications(batch, jsonCol), subscriptions, rules,
+          now.getOrElse(unix_timestamp(current_timestamp())))
+        graft.sinks.Sinks.websocketMessages(env)
+          .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+            it.foreach(r =>
+              hub.push(r.getAs[String]("key"), r.getAs[String]("value")))
+          }
       }
-      .start()
-
-  /** D3 streaming wiring — run a [[graft.sinks.FieldRegistry]]'s observe
-    * loop per micro-batch over an envelope stream: any batch that enlarges
-    * the discovered-field universe triggers exactly one registration
-    * callback (reference receiver.py:399–410).
-    */
-  def fieldRegistrationStream(envelopes: DataFrame, checkpointDir: String,
-      registry: graft.sinks.FieldRegistry,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    envelopes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) => registry.observe(batch); () }
       .start()
 
   /** Convenience: a file-based raw-notification stream (one JSON document

@@ -1136,6 +1136,30 @@ class StreamingSpec extends SparkSpec {
     assert(collected.isEmpty) // rejected notification → no message rows
   }
 
+  test("empty micro-batch: a zero-byte source file commits its batch, delivers nothing") {
+    // runIngest has no per-batch emptiness guard, so a batch with no input
+    // rows runs the whole composition and hands sendBatch an empty frame
+    val srcDir = tempDir("graft-zero-src")
+    val ckptDir = tempDir("graft-zero-ckpt")
+    Files.write(java.nio.file.Paths.get(srcDir, "b0.jsonl"), Array.emptyByteArray)
+    val collected = scala.collection.mutable.ArrayBuffer.empty[String]
+    val sent = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val q = Stream.runIngest(
+      raw = Stream.fileSource(spark, srcDir),
+      subscriptions = Fixtures.subscriptions(spark),
+      checkpointDir = ckptDir,
+      sendBatch = (batch: DataFrame, batchId: Long) => {
+        sent += batchId
+        collected ++= batch.collect().map(_.getAs[String]("key"))
+      },
+      now = Some(lit(FixedNow)))
+    q.awaitTermination(60000)
+    assert(sent.toSeq === Seq(0L), "sendBatch runs once, for batch 0")
+    assert(collected.isEmpty, s"an empty batch must deliver no message, got $collected")
+    assert(new java.io.File(ckptDir, "commits/0").exists(),
+      "the empty batch 0 must still commit")
+  }
+
   test("transformWithState heavy hitters: MG summary survives restart, " +
       "absorbs replays, equals the driver mgMerge replay batch for batch, " +
       "and keeps every true heavy hitter of the union") {
