@@ -16,7 +16,9 @@ import graft.schemas.NefSchemas
   * (D1/D2) → batch-collect JSON sink (E2/A3).
   *
   * Every stage is a `DataFrame => DataFrame`; the same composition runs in
-  * batch and inside a Structured Streaming `foreachBatch`.
+  * batch and, up to the per-record serialization, as the Structured
+  * Streaming query itself (Stream.runIngest), whose `foreachBatch` only
+  * groups and delivers.
   */
 object Ingest {
 

@@ -18,9 +18,11 @@ import graft.schemas.NefSchemas
   * together (which would scan the source three times), each eventNotif is
   * mapped — via the higher-order `transform` — to an array of envelope
   * structs chosen by a `CASE` on the event type, and exploded ONCE. The
-  * whole pipeline stays inside a single whole-stage-codegen span with no
-  * shuffle and no repeated scan; unsupported event types (C2) fall out for
-  * free because their CASE branch is null and `explode` drops null arrays.
+  * pipeline is one whole-stage-codegen span with no shuffle and no
+  * repeated scan, but `transform`, `filter` and `map_filter` are
+  * `CodegenFallback`: their lambdas run interpreted inside that span.
+  * Unsupported event types (C2) fall out for free because their CASE
+  * branch is null and `explode` drops null arrays.
   *
   * Inputs are *enriched* notifications: columns `notifId, eventNotifs` plus
   * the subscription context tags `snssai_sst, snssai_sd, dnn` (see
@@ -65,13 +67,6 @@ object Normalize {
       trajectory.as("trajectory"),
       comms.as("comms"))
 
-  /** `timeStamp`-string handling shared by all branches: parse only when the
-    * string is truthy (reference: `parse(ts) if ts else now`), then apply the
-    * `timestamp or now` double-fallback (reference receiver.py:128–131).
-    */
-  private def parsedTsOrNow(tsStr: Column, now: Column): Column =
-    tsOrNow(parseDatetimeToUnix(truthyStr(tsStr)), now)
-
   // ── PERF_DATA (reference receiver.py:89–135, C3) ──
 
   /** The 6 bitrate-string metrics and 8 integer delay/loss metrics with their
@@ -96,7 +91,15 @@ object Normalize {
   private def parseBitrate(c: Column): Column =
     call_function("parse_bitrate_mbps", c.cast(StringType))
 
-  def perfEnvelope(notifId: Column, info: Column, ctx: Ctx, now: Column): Column = {
+  /** The parsed `timeStamp`, only when the string is truthy (reference:
+    * `parse(ts) if ts else now`, receiver.py:128–131). Bound once per info
+    * by [[explodedEnvelopes]].
+    */
+  private def perfTs(info: Column): Column =
+    parseDatetimeToUnix(truthyStr(info.getField("timeStamp")))
+
+  /** `ts` is [[perfTs]] of `info`. */
+  private def perfEnvelope(notifId: Column, info: Column, ts: Column, ctx: Ctx, now: Column): Column = {
     val ueIp = info.getField("ueIpAddr")
     val ipv4 = truthyStr(ueIp.getField("ipv4Addr"))
     // elif: ipv6 only when ipv4 is NOT truthy (receiver.py:92–95)
@@ -120,7 +123,7 @@ object Normalize {
     val metrics = map_filter(map(entries: _*), (_, v) => v.isNotNull)
     envelope(
       notifId,
-      parsedTsOrNow(info.getField("timeStamp"), now),
+      tsOrNow(ts, now),
       "PERF_DATA",
       tagsStruct(ctx, ueIpv4Addr = ipv4, ueIpv6Addr = ipv6,
         appId = truthyStr(info.getField("appId"))),
@@ -129,8 +132,9 @@ object Normalize {
 
   // ── UE_MOBILITY (reference receiver.py:138–165, C4) ──
 
-  def mobilityEnvelope(notifId: Column, info: Column, ctx: Ctx, now: Column): Column = {
-    val trajectory = transform(coalesce(info.getField("ueTrajs"),
+  /** The normalized trajectory; bound once per info by [[explodedEnvelopes]]. */
+  private def trajectoryOf(info: Column): Column =
+    transform(coalesce(info.getField("ueTrajs"),
         array().cast(ArrayType(NefSchemas.ueTraj))), { t =>
       val nr = t.getField("location").getField("nrLocation")
       struct(
@@ -138,6 +142,10 @@ object Normalize {
         nr.getField("tai").getField("tac").as("tac"),
         nr.getField("ncgi").getField("nrCellId").as("nrCellId"))
     })
+
+  /** `trajectory` is [[trajectoryOf]] `info`. */
+  private def mobilityEnvelope(notifId: Column, info: Column, trajectory: Column,
+      ctx: Ctx, now: Column): Column = {
     // record ts := trajectory[0].ts when trajectory nonempty and ts truthy
     // (0 is falsy too — receiver.py:158), else now
     val first = element_at(trajectory, 1).getField("ts")
@@ -153,8 +161,9 @@ object Normalize {
 
   // ── UE_COMM (reference receiver.py:168–196, C5) ──
 
-  def commEnvelope(notifId: Column, info: Column, ctx: Ctx, now: Column): Column = {
-    val comms = transform(coalesce(info.getField("comms"),
+  /** The normalized comms array; bound once per info by [[explodedEnvelopes]]. */
+  private def commsOf(info: Column): Column =
+    transform(coalesce(info.getField("comms"),
         array().cast(ArrayType(NefSchemas.comm))), { c =>
       struct(
         parseDatetimeToUnix(truthyStr(c.getField("startTime"))).as("startTime"),
@@ -162,6 +171,10 @@ object Normalize {
         c.getField("ulVol").cast(LongType).as("ulVol"),
         c.getField("dlVol").cast(LongType).as("dlVol"))
     })
+
+  /** `comms` is [[commsOf]] `info`. */
+  private def commEnvelope(notifId: Column, info: Column, comms: Column,
+      ctx: Ctx, now: Column): Column = {
     val firstEnd = element_at(comms, 1).getField("endTime")
     envelope(
       notifId,
@@ -202,18 +215,28 @@ object Normalize {
     // deviation class as the malformed-line DLQ split. Null elements in
     // eventNotifs itself already fall out (null `en` → null CASE → null
     // array → explode drops). PipelineSpec pins all three shapes.
-    def infos(field: String): Column =
-      filter(en.getField(field), i => i.isNotNull)
+    //
+    // Each info's shared value (the parsed timeStamp, the trajectory, the
+    // comms array) is bound ONCE by a first `transform` to struct(i, v);
+    // the envelope `transform` reads the bound field. Passed as an inline
+    // subtree instead, every use (`tsOrNow` ×3, `size`, `element_at`, the
+    // envelope field) copies it: 7 copies of each array transform and 24
+    // regex parses for 4 parse sites, all planned by Catalyst and all
+    // evaluated per row by the interpreted lambdas.
+    def perInfo(field: String, shared: Column => Column)(
+        build: (Column, Column) => Column): Column =
+      transform(
+        transform(filter(en.getField(field), i => i.isNotNull),
+          i => struct(i.as("i"), shared(i).as("v"))),
+        b => build(b.getField("i"), b.getField("v")))
+    val notifId = col("notifId")
     val recArray =
       when(en.getField("event") === "PERF_DATA",
-        transform(infos("perfDataInfos"),
-          i => perfEnvelope(col("notifId"), i, ctx, now)))
+        perInfo("perfDataInfos", perfTs)(perfEnvelope(notifId, _, _, ctx, now)))
       .when(en.getField("event") === "UE_MOBILITY",
-        transform(infos("ueMobilityInfos"),
-          i => mobilityEnvelope(col("notifId"), i, ctx, now)))
+        perInfo("ueMobilityInfos", trajectoryOf)(mobilityEnvelope(notifId, _, _, ctx, now)))
       .when(en.getField("event") === "UE_COMM",
-        transform(infos("ueCommInfos"),
-          i => commEnvelope(col("notifId"), i, ctx, now)))
+        perInfo("ueCommInfos", commsOf)(commEnvelope(notifId, _, _, ctx, now)))
     enriched
       .select(col("notifId"), col("snssai_sst"), col("snssai_sd"), col("dnn"),
         explode(col("eventNotifs")).as("en"))
@@ -222,7 +245,8 @@ object Normalize {
   }
 
   /** The fused single-pass data plane: enriched notifications in, flat
-    * normalized envelope out. One scan, zero shuffles, one codegen span.
+    * normalized envelope out. One scan, zero shuffles, one codegen span
+    * (the higher-order lambdas inside it run interpreted).
     */
   def envelopes(enriched: DataFrame, now: Column): DataFrame =
     explodedEnvelopes(enriched, now).where(hasAnyTag(col("tags")))

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** A3/E2 — per-notification batch-collect into one JSON-array message, plus
   * E1 — the discovered-metric-fields aggregation.
@@ -45,10 +46,29 @@ object Sinks {
     * whitespace, so bracket + comma-join reproduces it byte-for-byte
     * (q23's golden oracle pins this).
     */
-  def kafkaBatches(records: DataFrame, deterministicOrder: Boolean = false): DataFrame = {
-    val record = struct(
+  def kafkaBatches(records: DataFrame, deterministicOrder: Boolean = false): DataFrame =
+    groupedBatches(serializedRecords(records, deterministicOrder))
+
+  /** The stateless first step of [[kafkaBatches]]: `notifId` plus `k`, the
+    * record's JSON form, or with `deterministicOrder` its sort-key struct
+    * (`ts`, `ev`, `j` = the JSON form). It runs row by row, so a streaming
+    * query can carry it (Stream.runIngest); the grouping needs the batch.
+    */
+  def serializedRecords(records: DataFrame, deterministicOrder: Boolean = false): DataFrame = {
+    val json = to_json(struct(
       col("timestamp"), col("tags"), col("event"), col("metrics"),
-      col("trajectory"), col("comms"))
+      col("trajectory"), col("comms")))
+    records.select(col("notifId"),
+      (if (deterministicOrder)
+        struct(col("timestamp").as("ts"), col("event").as("ev"), json.as("j"))
+      else json).as("k"))
+  }
+
+  /** The per-batch second step of [[kafkaBatches]]: one `[r1,r2,…]` message
+    * per notifId from [[serializedRecords]]' rows, sorted when `k` is the
+    * sort-key struct.
+    */
+  def groupedBatches(serialized: DataFrame): DataFrame = {
     // total order: (timestamp, event) fast path, serialized-record final
     // tie-break — records tying on both keys (e.g. two same-second
     // perfDataInfos) must still sort deterministically, or the JSON array
@@ -65,23 +85,15 @@ object Sinks {
         .when(l.getField("j") < r.getField("j"), -1)
         .when(l.getField("j") > r.getField("j"), 1)
         .otherwise(0)
-    val grouped =
-      if (deterministicOrder)
-        records
-          .select(col("notifId"), struct(
-            col("timestamp").as("ts"), col("event").as("ev"),
-            to_json(record).as("j")).as("k"))
-          .groupBy(col("notifId"))
-          .agg(transform(array_sort(collect_list(col("k")), cmp),
-            k => k.getField("j")).as("js"))
-      else
-        records
-          .select(col("notifId"), to_json(record).as("j"))
-          .groupBy(col("notifId"))
-          .agg(collect_list(col("j")).as("js"))
-    grouped.select(
-      col("notifId").as("key"),
-      concat(lit("["), array_join(col("js"), ","), lit("]")).as("value"))
+    val collected = collect_list(col("k"))
+    val sorted = serialized.schema("k").dataType.isInstanceOf[StructType]
+    serialized
+      .groupBy(col("notifId"))
+      .agg((if (sorted) transform(array_sort(collected, cmp), k => k.getField("j"))
+        else collected).as("js"))
+      .select(
+        col("notifId").as("key"),
+        concat(lit("["), array_join(col("js"), ","), lit("]")).as("value"))
   }
 
   /** A4: per-record WebSocket fan-out payload

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.Ingest
 import graft.policy.Policy
+import graft.sinks.Sinks
 
 /** H2/H4/H5/H7 — the Structured Streaming driver around the batch-identical
   * transform library.
@@ -15,7 +16,8 @@ import graft.policy.Policy
   * policy → one Kafka message per request, at-most-once (produce failures
   * swallowed, receiver.py:446–456). The Spark-native equivalent is a
   * `readStream` source of raw notification JSON driven through the SAME
-  * `Ingest` composition inside `foreachBatch`, with a checkpoint directory:
+  * `Ingest` composition as a streaming query, analyzed once per query, with
+  * `foreachBatch` only grouping and delivering, and a checkpoint directory:
   * delivery becomes at-least-once (a beneficial, documented deviation —
   * SURVEY.md H5), batching is the micro-batch trigger (H7), and per-
   * subscription ordering rides the notifId message key (H6).
@@ -25,13 +27,21 @@ object Stream {
   /** Run the NEF data plane over a streaming DataFrame of raw JSON
     * notifications (one JSON document per row in `jsonCol`).
     *
+    * Parse → enrich → normalize → policy → per-record serialization
+    * ([[graft.sinks.Sinks.serializedRecords]]) are applied to the streaming
+    * DataFrame itself, so Catalyst analyzes them once per query and only
+    * re-plans them per micro-batch. `foreachBatch` receives the serialized
+    * rows and does the per-batch part alone: the per-notifId grouping
+    * ([[graft.sinks.Sinks.groupedBatches]]) and `sendBatch`. The default
+    * clock is the micro-batch timestamp ([[envelopeStream]]).
+    *
     * `sendBatch` receives the per-micro-batch Kafka-shaped frame
     * (key = notifId, value = JSON array) — in production a Kafka writer,
     * in tests a memory collector. The empty-batch short-circuit (C7,
-    * receiver.py:391–392) needs no guard: when no record survives,
-    * `kafkaBatches` emits no row, so `sendBatch` gets an empty frame and
-    * sends no message. A per-batch emptiness check would cost one more
-    * Spark job per micro-batch, re-reading the source.
+    * receiver.py:391–392) needs no guard: when no record survives, the
+    * grouping emits no row, so `sendBatch` gets an empty frame and sends
+    * no message. A per-batch emptiness check would cost one more Spark job
+    * per micro-batch, re-reading the source.
     */
   def runIngest(
       raw: DataFrame,
@@ -42,25 +52,28 @@ object Stream {
       jsonCol: String = "value",
       now: Option[Column] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    raw.writeStream
+    Sinks.serializedRecords(envelopeStream(raw, subscriptions, rules, jsonCol, now))
+      .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val notifs = Ingest.parseNotifications(batch, jsonCol)
-        val clock = now.getOrElse(unix_timestamp(current_timestamp()))
-        sendBatch(Ingest.kafkaMessages(notifs, subscriptions, rules, clock), batchId)
+        sendBatch(Sinks.groupedBatches(batch), batchId)
       }
       .start()
 
   /** Full streaming pipeline to envelopes (for sinks that want the flat
-    * record stream rather than the batched Kafka shape).
+    * record stream rather than the batched Kafka shape). `now` is the
+    * processing-time fallback clock, by default `current_timestamp()`,
+    * which on a streaming frame is the micro-batch timestamp.
     */
   def envelopeStream(
       raw: DataFrame,
       subscriptions: DataFrame,
       rules: Policy.Rules = Policy.Rules.allowAll,
-      jsonCol: String = "value"): DataFrame =
-    Ingest.envelopes(Ingest.parseNotifications(raw, jsonCol), subscriptions, rules)
+      jsonCol: String = "value",
+      now: Option[Column] = None): DataFrame =
+    Ingest.envelopes(Ingest.parseNotifications(raw, jsonCol), subscriptions, rules,
+      now.getOrElse(unix_timestamp(current_timestamp())))
 
   /** H2/H3 — event-time tumbling-window aggregation with a watermark over
     * the envelope stream: per (window, event-type) record counts. The
@@ -908,9 +921,11 @@ object Stream {
 
   /** A4 wiring: raw notification stream → envelopes → per-record
     * `data_ingested` frames ([[graft.sinks.Sinks.websocketMessages]]) →
-    * hub routing. The route runs `foreachPartition` executor-side — no
-    * driver materialization; exactly where a production push layer holds
-    * its per-partition connection pool. Delivery matches the reference's
+    * hub routing. The frames are built by the streaming query itself
+    * (analyzed once, like [[runIngest]]); `foreachBatch` only pushes. The
+    * route runs `foreachPartition` executor-side — no driver
+    * materialization; exactly where a production push layer holds its
+    * per-partition connection pool. Delivery matches the reference's
     * semantics: every surviving record of a batch is pushed to that
     * notifId's subscribers, per record, not per batch.
     */
@@ -923,18 +938,14 @@ object Stream {
       jsonCol: String = "value",
       now: Option[Column] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    raw.writeStream
+    Sinks.websocketMessages(envelopeStream(raw, subscriptions, rules, jsonCol, now))
+      .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val env = Ingest.envelopes(
-          Ingest.parseNotifications(batch, jsonCol), subscriptions, rules,
-          now.getOrElse(unix_timestamp(current_timestamp())))
-        graft.sinks.Sinks.websocketMessages(env)
-          .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-            it.foreach(r =>
-              hub.push(r.getAs[String]("key"), r.getAs[String]("value")))
-          }
+        batch.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+          it.foreach(r => hub.push(r.getAs[String]("key"), r.getAs[String]("value")))
+        }
       }
       .start()
 

@@ -440,4 +440,13 @@ class PipelineSpec extends SparkSpec {
     assert(rows(envelopes(typeConfusion)).isEmpty,
       "type-confused payload must drop whole, like the reference's 500")
   }
+
+  test("fuzz corpus: the data plane's envelopes are pinned by count and " +
+      "sorted-JSON SHA-256 (tools/fuzz, fixed now)") {
+    val env = Ingest.envelopes(Ingest.parseNotifications(FuzzCorpus.raw(spark)),
+      FuzzCorpus.subscriptions(spark), now = lit(FuzzCorpus.NowSec))
+    val lines = FuzzCorpus.sortedJsonLines(env)
+    assert(lines.size === 9384)
+    assert(FuzzCorpus.sha256(lines) === "38d7399ec32c930cf63284ea9b403eca7a6fc32cda8385b6eef1016ea2f96d62")
+  }
 }

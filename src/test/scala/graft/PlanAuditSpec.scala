@@ -52,6 +52,29 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("regexp_extract"), s"declarative bitrate parser in the plan:\n$p")
   }
 
+  test("q20: each per-info shared subexpression is planned once — 4 timestamp " +
+      "regex parses, one trajectory and one comms transform, a bounded plan") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, RLike}
+    import org.apache.spark.sql.types.{ArrayType, StructType}
+    val p = SparkEntry.queries("q20_nef_envelope")(spark, dir).queryExecution.optimizedPlan
+    val exprs = p.collect { case n => n.expressions.flatMap(_.collect { case e => e }) }.flatten
+    def transformsOf(fields: String*): Int = exprs.count {
+      case t: ArrayTransform => t.dataType match {
+        case ArrayType(s: StructType, _) => s.fieldNames.toSeq == fields
+        case _ => false
+      }
+      case _ => false
+    }
+    // one parse per site: the PERF_DATA timeStamp, trajectory ts, comms
+    // startTime and endTime — re-inlined, tsOrNow/size/element_at copied
+    // them to 24
+    assert(exprs.count(_.isInstanceOf[RLike]) === 4)
+    assert(transformsOf("ts", "tac", "nrCellId") === 1, "trajectory transform re-inlined")
+    assert(transformsOf("startTime", "endTime", "ulVol", "dlVol") === 1,
+      "comms transform re-inlined")
+    assert(exprs.size <= 900, s"q20's optimized plan grew to ${exprs.size} expression nodes")
+  }
+
   test("q01: aggregation is partial+final hash aggregate") {
     val p = plan("q01_pricing_summary")
     assert(p.contains("partial_sum") || p.contains("partial_count"),
